@@ -190,14 +190,22 @@ object Dedup {
     * where label = min id reachable from id. Min-label propagation with
     * pointer jumping (label ← label's label) each round, so convergence is
     * O(log diameter) supersteps, not O(diameter) — the standard distributed
-    * connected-components shape. Each round is two joins + an aggregate
-    * over the (tiny, post-verification) edge set. */
+    * connected-components shape. Each round is four joins + an aggregate
+    * over the (tiny, post-verification) edge set: the edge step und ⋈ labels
+    * (aggregated), the pointer jump labels ⋈ labels, and both folded back
+    * into labels.
+    *
+    * LINEAGE: a round references the previous round's frame four times, so
+    * an uncut plan grows ~4× per round (persist() caches rows, not the
+    * plan). Each round is therefore materialized with an eager
+    * localCheckpoint(), which truncates the plan to a scan of the
+    * checkpointed rows — plan size is independent of the round count. The
+    * checkpoint blocks live in executor storage (not reliable storage) and
+    * are reclaimed by the context cleaner once unreferenced: the same
+    * trade-off GraphX makes for iterative lineage. */
   def connectedMinLabel(ids: DataFrame, edges: DataFrame): DataFrame = {
     val und = edges.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(edges.select(col("id_b"), col("id_a"))).distinct().persist()
-    // `cached` tracks the frame that actually holds the persist (a .select
-    // view would make unpersist a no-op and leak every round's cache)
-    var cached: DataFrame = null
     var labels = ids.select(col("id"), col("id").as("label"))
     var changed = 1L
     var rounds = 0
@@ -214,11 +222,9 @@ object Dedup {
           least(col("label"),
             coalesce(col("elabel"), col("label")),
             coalesce(col("jlabel"), col("label"))).as("label"))
-        .persist()
-      // ONE action per round: materializes `next` and tests the fixed point
+        .localCheckpoint()
+      // the fixed-point test reads the checkpointed rows, not the round's plan
       changed = next.filter(col("label") =!= col("old")).count()
-      if (cached != null) cached.unpersist()
-      cached = next
       labels = next.select("id", "label")
       rounds += 1
     }
@@ -297,9 +303,9 @@ object Dedup {
     val edgeIds = dups.select(col("id_a").as("id"))
       .union(dups.select(col("id_b"))).distinct()
     val comp = connectedMinLabelAuto(edgeIds, dups)
-    // comp's final round is already materialized+cached by the CC loop, so
-    // the verified-pair cache can be released here (lineage hygiene: only
-    // the small final label frame stays cached per call)
+    // on the distributed path comp's final round is checkpointed by the CC
+    // loop (lineage cut, not cached), so the verified-pair cache can be
+    // released here: no cached frame outlives the call
     dups.unpersist()
     df.select(col(idCol).as("id"))
       .join(comp, Seq("id"), "left")

@@ -116,6 +116,19 @@ class OpsSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
+  test("connectedMinLabel: result plan size does not grow with the round count") {
+    // a 64-id chain needs more propagation rounds than a single edge; each
+    // round's lineage is cut, so both results have the same plan shape
+    def planNodes(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.analyzed.collect { case n => n }.size
+    val chain = Dedup.connectedMinLabel((1L to 64L).toDF("id"),
+      (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
+    val pair = Dedup.connectedMinLabel(Seq(1L, 2L).toDF("id"),
+      Seq((1L, 2L)).toDF("id_a", "id_b"))
+    assert(planNodes(chain) == planNodes(pair))
+    assert(chain.collect().forall(_.getLong(1) == 1L))
+  }
+
   test("LSH bucket cap: degenerate bucket split preserves exact results") {
     // 30 identical vectors pile into one bucket; cap 8 forces the salted
     // subgroup split — results must equal the unbounded join exactly
