@@ -98,17 +98,30 @@ object CrawlLoop {
       .write.mode(SaveMode.Overwrite).parquet(path)
   }
 
-  /** One delta dir's bloom blobs as a (bucket -> blob) map — one row per
-    * bucket per delta by construction (buildFilters groups by bucket). */
-  private def bloomDeltaOf(shards: Array[FilterShard]): Map[Int, Array[Byte]] =
-    shards.map(s => s.bucket -> s.bloom).toMap
+  /** One delta dir's (bucket, bloom) rows as book deltas of ONE blob per
+    * bucket each. A steady superstep writes one row per bucket, so one
+    * delta; a superstep that re-pops retired urls adds a re-insert row for
+    * some buckets, which becomes a second delta instead of replacing the
+    * fresh-url blob (membership is ANY-delta). */
+  private def bloomDeltas(
+      rows: Seq[(Int, Array[Byte])]): Seq[Map[Int, Array[Byte]]] = {
+    val byBucket = rows.groupBy(_._1).toSeq
+    val depth = (1 +: byBucket.map(_._2.size)).max
+    (0 until depth).map(k =>
+      byBucket.flatMap { case (b, xs) => xs.lift(k).map(x => b -> x._2) }.toMap)
+  }
 
-  /** Resume path: re-load each persisted delta dir as its own book delta,
-    * preserving the O(delta)-per-broadcast shape across restarts. */
-  private def loadBloomDelta(spark: SparkSession, path: String): Map[Int, Array[Byte]] =
-    spark.read.parquet(path)
+  private def appendShards(spark: SparkSession, book: SeenSet.FilterBook,
+                           shards: Seq[FilterShard]): SeenSet.FilterBook =
+    bloomDeltas(shards.map(s => s.bucket -> s.bloom))
+      .foldLeft(book)(SeenSet.appendDelta(spark, _, _))
+
+  /** Resume path: re-load each persisted delta dir as its own book
+    * delta(s), preserving the O(delta)-per-broadcast shape across restarts. */
+  private def loadBloomDeltas(spark: SparkSession, path: String): Seq[Map[Int, Array[Byte]]] =
+    bloomDeltas(spark.read.parquet(path)
       .select(col("bucket").cast("int"), col("bloom"))
-      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toMap
+      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toSeq)
 
   /** Uncapped body size of a doc row — the reference's content_length
     * analog for the megasite log filter (F9, src/main.rs:189-193). */
@@ -218,12 +231,12 @@ object CrawlLoop {
           frontier.select("url", "bucket")))
         writeShards(spark, shards, p0)
         filtersPaths = Seq(p0)
-        book = SeenSet.appendDelta(spark, book, bloomDeltaOf(shards))
+        book = appendShards(spark, book, shards)
       } else {
         // one read per persisted delta at resume (≤ CompactEvery dirs), then
         // the book's broadcasts live for the whole run
-        book = filtersPaths.foldLeft(book)((b, p) =>
-          SeenSet.appendDelta(spark, b, loadBloomDelta(spark, p)))
+        book = filtersPaths.flatMap(loadBloomDeltas(spark, _))
+          .foldLeft(book)(SeenSet.appendDelta(spark, _, _))
       }
     }
 
@@ -425,20 +438,42 @@ object CrawlLoop {
         val frontierSize = perBucket.values.sum
 
         // Delta snapshot: rewrite ONLY the changed buckets, clustered so each
-        // bucket lands in exactly one file (two with splitSnapshotsByPopped:
-        // the popped/unpopped split lets the next pop's !popped filter prune
-        // the crawled rows' files at the directory level); unchanged buckets
-        // keep their previous dirs by reference in bucketPaths.
+        // bucket lands in exactly one file; unchanged buckets keep their
+        // previous dirs by reference in bucketPaths.
         val fPath = frontierPath(stateDir, batch)
-        val snapCols =
-          if (cfg.splitSnapshotsByPopped) Seq("bucket", "popped") else Seq("bucket")
         timed("snapshot", batch) {
           merged.select("url", "host", "bucket", "priority", "popped")
             .repartition(col("bucket"))
-            .write.mode(SaveMode.Overwrite).partitionBy(snapCols: _*).parquet(fPath)
+            .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(fPath)
         }
         bucketPaths = bucketPaths ++
           byBucket.map(r => r.getInt(0).toString -> fPath).toMap
+
+        // Shrink the pending-retired record BEFORE phase 4, so a compaction
+        // in this superstep excludes only the still-pending urls and the
+        // re-popped ones come out cuckoo-live. The rewrite is O(pending) and
+        // only happens on supersteps that actually re-fetched one. Pop urls
+        // are frontier-unique and repopped ⊆ pending, so the new count is
+        // exact without another job.
+        repopped.foreach { case (df, n) =>
+          val p = s"${batchDir(stateDir, batch)}/retired"
+          pendingRetiredCount -= n
+          pendingRetiredSet = pendingRetiredSet.map(_ -- repoppedSmall)
+          if (pendingRetiredCount == 0L) retiredPath = None
+          else {
+            pendingRetiredSet match {
+              case Some(s) =>
+                import spark.implicits._
+                s.toSeq.toDF("url").write.mode(SaveMode.Overwrite).parquet(p)
+              case None =>
+                // bulk: left-anti rewrite, reads old record, never collects
+                spark.read.parquet(retiredPath.get)
+                  .join(df, Seq("url"), "left_anti")
+                  .write.mode(SaveMode.Overwrite).parquet(p)
+            }
+            retiredPath = Some(p)
+          }
+        }
 
         // ---- phase 4: seen-filter DELTA (bloom + cuckoo) ----
         // Append-only: this batch's per-bucket filter blobs were already
@@ -465,7 +500,7 @@ object CrawlLoop {
           val shards = freshShards ++ reinsShards
           writeShards(spark, shards, newFiltersPath)
           filtersPaths = filtersPaths :+ newFiltersPath
-          book = SeenSet.appendDelta(spark, book, bloomDeltaOf(shards))
+          book = appendShards(spark, book, shards)
           if (filtersPaths.size > CompactEvery) {
             // Compaction REBUILDS from the frontier (the exact seen set)
             // instead of merging delta blobs: the result is right-sized for
@@ -485,9 +520,11 @@ object CrawlLoop {
               else SeenSet.buildFiltersExcluding(cBase, pendingRetiredDf))
             writeShards(spark, cShards, compacted)
             filtersPaths = Seq(compacted)
-            book = SeenSet.compactBook(spark, book, bloomDeltaOf(cShards))
+            book = SeenSet.compactBook(spark, book,
+              cShards.map(s => s.bucket -> s.bloom).toMap) // one row per bucket
           }
         }
+        repopped.foreach(_._1.unpersist())
 
         val m = BatchMetrics(
           batch = batch, popped = popped, robotsDenied = robotsDenied,
@@ -497,31 +534,6 @@ object CrawlLoop {
           frontierSize = frontierSize, megasites = megasites,
           elapsedMs = (System.nanoTime() - tb) / 1000000L)
         metricsOut += m
-
-        repopped.foreach { case (df, n) =>
-          // shrink the pending-retired record (rewrite is O(pending), and
-          // only happens on supersteps that actually re-fetched one). Pop
-          // urls are frontier-unique and repopped ⊆ pending, so the new
-          // count is exact without another job.
-          val p = s"${batchDir(stateDir, batch)}/retired"
-          pendingRetiredCount -= n
-          pendingRetiredSet = pendingRetiredSet.map(_ -- repoppedSmall)
-          if (pendingRetiredCount == 0L) retiredPath = None
-          else {
-            pendingRetiredSet match {
-              case Some(s) =>
-                import spark.implicits._
-                s.toSeq.toDF("url").write.mode(SaveMode.Overwrite).parquet(p)
-              case None =>
-                // bulk: left-anti rewrite, reads old record, never collects
-                spark.read.parquet(retiredPath.get)
-                  .join(df, Seq("url"), "left_anti")
-                  .write.mode(SaveMode.Overwrite).parquet(p)
-            }
-            retiredPath = Some(p)
-          }
-          df.unpersist()
-        }
 
         Snapshots.commit(stateDir, Manifest(
           batch, "done", frontierPath = fPath,
@@ -612,11 +624,9 @@ object CrawlLoop {
         readFrontier(spark, m.bucketPaths.filter(kv => changed.contains(kv._1)))
           .persist()
       val outDir = s"$base-$k/frontier"
-      val snapCols =
-        if (cfg.splitSnapshotsByPopped) Seq("bucket", "popped") else Seq("bucket")
       Frontier.retire(slice, retireUrls)
         .repartition(col("bucket"))
-        .write.mode(SaveMode.Overwrite).partitionBy(snapCols: _*).parquet(outDir)
+        .write.mode(SaveMode.Overwrite).partitionBy("bucket").parquet(outDir)
       bucketPaths = bucketPaths ++ changed.map(_ -> outDir)
 
       if (m.filtersPaths.nonEmpty) {

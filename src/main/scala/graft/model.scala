@@ -98,11 +98,6 @@ final case class CrawlConfig(
     nBuckets: Int = 64,             // frontier hash shards (src/config.rs:71 n_pqueues)
     saltBuckets: Int = 16,          // hot-host salting for the pop window
     hostTopKSpillBound: Int = 65536, // caps above this use the spill-safe window pop
-    // Snapshot layout: also partition each bucket's parquet by `popped`, so
-    // the pop's !popped filter prunes every already-crawled row's files at
-    // the directory level (zero IO for them). Saves O(popped fraction) of
-    // the per-superstep pop scan; costs one extra file per (bucket, batch).
-    splitSnapshotsByPopped: Boolean = false,
     maxBatches: Int = 1000,
     indexWhileCrawling: Boolean = false,
     academicOnly: Boolean = false)  // F11 gate (src/main-old.rs:180), off in current gen

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Deduplication operators for training-data curation, each designed around
   * its scale behavior:
@@ -249,17 +250,34 @@ object Dedup {
     * back, so a corpus-sized `ids` frame is safe here (untouched ids keep
     * label = id). */
   def connectedMinLabelAuto(ids: DataFrame, edges: DataFrame,
-                            localLimit: Long = 100000L): DataFrame = {
-    import org.apache.spark.sql.types.LongType
-    val spark = ids.sparkSession
-    val idsAreLong = ids.schema.head.dataType == LongType &&
-      edges.schema.take(2).forall(_.dataType == LongType)
-    if (!idsAreLong) return connectedMinLabel(ids, edges)
+                            localLimit: Long = LocalEdgeLimit): DataFrame = {
+    val local =
+      if (ids.schema.head.dataType != LongType) None
+      else localMinLabels(edges, localLimit)
+    local match {
+      case Some(labels) =>
+        ids.select(col("id"))
+          .join(broadcast(labels), Seq("id"), "left")
+          .select(col("id"), coalesce(col("label"), col("id")).as("label"))
+      case None => connectedMinLabel(ids, edges)
+    }
+  }
+
+  private val LocalEdgeLimit = 100000L
+
+  /** The driver union-find of [[connectedMinLabelAuto]]: (id, label) for
+    * the edge-touched ids only, built from the collected edge rows — a
+    * local frame with no lineage back to `edges`. None when the edges are
+    * not long-typed or exceed the collect cap (one limit(cap+1) action is
+    * both the size gate and the edge fetch). */
+  private def localMinLabels(edges: DataFrame, localLimit: Long): Option[DataFrame] = {
+    val spark = edges.sparkSession
+    if (!edges.schema.take(2).forall(_.dataType == LongType)) return None
     val byteBudget = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       spark.conf.get("spark.driver.maxResultSize", "1g")) / 4
     val cap = math.min(localLimit, math.max(1024L, byteBudget / 64L)).toInt
     val rows = edges.select(col("id_a"), col("id_b")).limit(cap + 1).collect()
-    if (rows.length > cap) return connectedMinLabel(ids, edges)
+    if (rows.length > cap) return None
     import spark.implicits._
     val parent = scala.collection.mutable.HashMap.empty[Long, Long]
     def find(x: Long): Long = {
@@ -276,12 +294,8 @@ object Dedup {
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
-    // union by min root => every root IS its component minimum; ids outside
-    // the edge set are their own label (left join + coalesce)
-    val local = touched.toSeq.map(i => (i, find(i))).toDF("id", "tlabel")
-    ids.select(col("id"))
-      .join(broadcast(local), Seq("id"), "left")
-      .select(col("id"), coalesce(col("tlabel"), col("id")).as("label"))
+    // union by min root => every root IS its component minimum
+    Some(touched.toSeq.map(i => (i, find(i))).toDF("id", "label"))
   }
 
   /** The composed near-dedup pipeline a training-data curator runs:
@@ -299,13 +313,14 @@ object Dedup {
     val cand = lshCandidates(minhashSignatures(sh, hashes), hashes, bands)
     val dups = verifiedNearDups(sh, cand, minJaccardMicro).persist()
     // CC runs over the (small) edge-touched id set only; everyone else is
-    // their own keeper — the iteration never scans the full corpus
-    val edgeIds = dups.select(col("id_a").as("id"))
-      .union(dups.select(col("id_b"))).distinct()
-    val comp = connectedMinLabelAuto(edgeIds, dups)
-    // on the distributed path comp's final round is checkpointed by the CC
-    // loop (lineage cut, not cached), so the verified-pair cache can be
-    // released here: no cached frame outlives the call
+    // their own keeper — the iteration never scans the full corpus. Both
+    // paths cut the lineage to `dups`: the driver path's labels are a local
+    // frame built from the collected edges, the distributed path's final
+    // round is checkpointed. So the verified-pair cache can be released
+    // here, and acting on the result never re-runs the verification.
+    val comp = localMinLabels(dups, LocalEdgeLimit).getOrElse(connectedMinLabel(
+      dups.select(col("id_a").as("id")).union(dups.select(col("id_b"))).distinct(),
+      dups))
     dups.unpersist()
     df.select(col(idCol).as("id"))
       .join(comp, Seq("id"), "left")

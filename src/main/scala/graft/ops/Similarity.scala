@@ -450,10 +450,13 @@ object Similarity {
         round(col("sim"), 4).as("sim"))
   }
 
-  /** IVF-PQ composed ANN (Jégou et al. 2011 §V / the FAISS IVFPQ layout):
+  /** IVF-PQ composed ANN, IVFADC-style (after Jégou et al. 2011 §V):
     * IVF restricts the scan to `nprobe` cells' members, PQ-ADC scores
-    * those candidates from their CODES — both halves already exist
-    * ([[ivfTopK]]'s probe plan, [[pqTopK]]'s LUT plan); the composition
+    * those candidates from their CODES. Unlike the paper (and FAISS
+    * IVFPQ), the codes quantize the RAW vectors with one codebook shared
+    * by every cell, not the residuals (vector minus its assigned
+    * centroid); the q54 oracle twin encodes the same way. Both halves
+    * already exist ([[ivfTopK]]'s probe plan, [[pqTopK]]'s LUT plan); the composition
     * inserts the probe join before the ADC join, so the scoring pass
     * touches nprobe/kCells of the code table and the raw embeddings
     * never enter the hot path at all. Same determinism discipline:

@@ -253,6 +253,58 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(mFinal.retiredPath.isEmpty) // pending record drained
   }
 
+  test("retire then stepwise re-crawl: no url gains a second frontier row") {
+    // a superstep that re-pops retired urls writes a fresh-url AND a
+    // re-insert filter row for some buckets; both must stay in the Bloom
+    // book (and in the book rebuilt on every resume), or links to the
+    // forgotten fresh urls split as new and duplicate their frontier rows
+    val dir = tmpDir("retire-steps")
+    val stepCfg = cfg.copy(batchSize = 60, perHostCap = 8)
+    runEngine(dir, stepCfg.copy(maxBatches = 3))
+    val m0 = Snapshots.readCurrent(dir).get
+    val retired = Snapshots.readFrontier(spark, m0.bucketPaths)
+      .filter(col("popped") && pmod(xxhash64(col("url")), lit(10)) === 0)
+      .select("url").persist()
+    val nRetired = retired.count()
+    assert(nRetired > 0)
+    CrawlLoop.retire(spark, dir, retired, cfg)
+    retired.unpersist()
+    (4 to 9).foreach { b =>
+      runEngine(dir, stepCfg.copy(maxBatches = b)) // resume: one superstep
+      val m = Snapshots.readCurrent(dir).get
+      val f = Snapshots.readFrontier(spark, m.bucketPaths)
+      val twice = f.groupBy("url").count().filter(col("count") > 1).count()
+      assert(twice == 0, s"superstep ${m.batch}: $twice urls with two frontier rows")
+      val poppedSum = CrawlLoop.readMetrics(spark, dir).map(_.popped).sum
+      assert(f.filter(col("popped")).count() == poppedSum - nRetired,
+        s"superstep ${m.batch}: popped rows != sum(popped) - retired")
+    }
+  }
+
+  test("compaction in a re-pop superstep keeps the re-popped url cuckoo-live") {
+    import spark.implicits._
+    // supersteps 0..6 leave 8 filter dirs; retire adds one, and the next
+    // superstep's delta pushes the count past CompactEvery, so the superstep
+    // that re-pops the victim is also the one that compacts
+    val dir = tmpDir("compact-repop")
+    val smallCfg = cfg.copy(batchSize = 12, perHostCap = 3)
+    runEngine(dir, smallCfg.copy(maxBatches = CrawlLoop.CompactEvery - 1))
+    val m0 = Snapshots.readCurrent(dir).get
+    assert(m0.filtersPaths.size == CrawlLoop.CompactEvery)
+    val victim = Snapshots.readFrontier(spark, m0.bucketPaths)
+      .filter(col("popped")).select("url").collect().map(_.getString(0)).min
+    CrawlLoop.retire(spark, dir, Seq(victim).toDF("url"), cfg)
+    runEngine(dir, smallCfg.copy(maxBatches = CrawlLoop.CompactEvery,
+      batchSize = 10000, perHostCap = 10000))
+    val m1 = Snapshots.readCurrent(dir).get
+    assert(m1.batch == m0.batch + 1 && m1.filtersPaths.size == 1) // compacted
+    assert(m1.retiredPath.isEmpty) // the victim was re-popped
+    val in = Seq(victim).toDF("url")
+      .withColumn("bucket", Frontier.bucketCol(col("url"), cfg.nBuckets))
+    val f = m1.filtersPaths.map(spark.read.parquet).reduce(_ unionByName _)
+    assert(SeenSet.probeCuckoo(in, f).select("seenish").first().getBoolean(0))
+  }
+
   test("bulk retire: 50K-url record stays distributed (no driver in-list), lifecycle intact") {
     import spark.implicits._
     val dir = tmpDir("bulkretire")
@@ -297,27 +349,6 @@ class CrawlEngineSpec extends AnyFunSuite {
     val in = Seq(popped0.head).toDF("url")
       .withColumn("bucket", Frontier.bucketCol(col("url"), cfg.nBuckets))
     assert(SeenSet.probeCuckoo(in, f).select("seenish").first().getBoolean(0))
-  }
-
-  test("popped-partitioned snapshots: identical crawl, resume, and metrics") {
-    // splitSnapshotsByPopped only changes the parquet layout (bucket/popped
-    // directory split for pop-scan pruning) — every result must be
-    // byte-equal to the default layout's
-    val a = tmpDir("split-a"); val b = tmpDir("split-b")
-    val resA = runEngine(a)
-    val resB = runEngine(b, cfg.copy(splitSnapshotsByPopped = true))
-    assert(resA.batches == resB.batches.map(_.copy(elapsedMs = 0))
-      .zip(resA.batches).map { case (x, y) => x.copy(elapsedMs = y.elapsedMs) })
-    def frontierOf(dir: String) =
-      Snapshots.readFrontier(spark, Snapshots.readCurrent(dir).get.bucketPaths)
-        .select("url", "host", "bucket", "priority", "popped").collect()
-        .map(_.toSeq).toSet
-    assert(frontierOf(a) == frontierOf(b))
-    // resume works across the split layout too
-    val c = tmpDir("split-c")
-    runEngine(c, cfg.copy(splitSnapshotsByPopped = true, maxBatches = 3))
-    runEngine(c, cfg.copy(splitSnapshotsByPopped = true))
-    assert(frontierOf(c) == frontierOf(a))
   }
 
   test("delta snapshots: unchanged buckets carry forward by reference, changed ones rewrite") {

@@ -129,6 +129,24 @@ class OpsSpec extends AnyFunSuite {
     assert(chain.collect().forall(_.getLong(1) == 1L))
   }
 
+  test("nearDupKeepers: result plan holds the verification subtree at most once") {
+    // every pass of shingle -> MinHash -> LSH -> verify explodes rows
+    // (Generate nodes); a result whose plan re-runs the verification per
+    // side of a union carries twice the verified-pair plan's Generates
+    def generates(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect {
+        case g: org.apache.spark.sql.catalyst.plans.logical.Generate => g }.size
+    val sh = Dedup.docShingles(docs, "doc_id", "text", 3)
+    val verified = Dedup.verifiedNearDups(sh,
+      Dedup.lshCandidates(Dedup.minhashSignatures(sh, 8), 8, 2), 10000L)
+    assert(generates(verified) > 0)
+    val keepers = Dedup.nearDupKeepers(docs, "doc_id", "text",
+      shingleK = 3, hashes = 8, bands = 2, minJaccardMicro = 10000L)
+    assert(generates(keepers) <= generates(verified))
+    val got = keepers.collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    assert(got(3L) == ((0L, 1L)) && got(0L) == ((0L, 0L)) && got(2L) == ((2L, 0L)))
+  }
+
   test("LSH bucket cap: degenerate bucket split preserves exact results") {
     // 30 identical vectors pile into one bucket; cap 8 forces the salted
     // subgroup split — results must equal the unbounded join exactly
