@@ -13,9 +13,12 @@ import org.apache.spark.sql.functions._
   * Spark: postings are rows (epoch, term, doc_id, score) written as parquet
   * partitioned by epoch and sorted within partitions by term — parquet's
   * dictionary/RLE encoding replaces the hand-rolled RunEncoder
-  * (src/runencoder.rs) and term min/max column stats replace the sorted
-  * binary-searchable header file (src/index.rs:88-98): a term-predicate scan
-  * prunes row groups exactly like the header binary search pruned offsets.
+  * (src/runencoder.rs). The sorted binary-searchable header file
+  * (src/index.rs:88-98) is replaced by the in-memory per-(epoch, term)
+  * stats table of [[Search.Index]], computed once when the index is opened.
+  * Parquet's term min/max row-group stats do not take its place: at crawl
+  * sizes each file is one row group whose term range spans the vocabulary,
+  * so a term-predicate scan reads every row.
   */
 object Indexer {
 
@@ -72,8 +75,9 @@ object Indexer {
     (postings, docmeta)
   }
 
-  /** Postings sink (S6): partitioned by epoch, term-sorted within files for
-    * row-group pruning on term predicates.
+  /** Postings sink (S6): partitioned by epoch, term-sorted within files, so
+    * row-group stats can prune term predicates once a file holds several
+    * row groups.
     *
     * Dynamic partition OVERWRITE (not append): each crawl superstep is one
     * epoch, so a replayed superstep (crash after the index write, before the
@@ -96,8 +100,7 @@ object Indexer {
       .partitionBy("epoch").parquet(path)
 
   /** Shard merge (the preprocessor binary, preprocessor/src/main.rs:29-60):
-    * doc ids are globally unique hashes here, so the merge is a pure union —
-    * re-partitioned by term so query-term scans stay pruned. */
+    * doc ids are globally unique hashes here, so the merge is a pure union. */
   def mergeShards(shards: Seq[DataFrame]): DataFrame =
     shards.reduce(_.unionByName(_))
 }

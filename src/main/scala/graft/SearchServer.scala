@@ -1,9 +1,10 @@
 package graft
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import com.sun.net.httpserver.{HttpContext, HttpExchange, HttpHandler, HttpServer}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.Executor
 
 /** S9: the search HTTP endpoint — the reference serves
   * `GET /search?query=...` from a Rocket handler that whitespace-splits the
@@ -15,11 +16,14 @@ import java.nio.charset.StandardCharsets.UTF_8
   * output is JSON — the right default for a library whose callers are
   * programs — with `format=html` rendering the reference's results page
   * (search form, scanned-count line, one anchor per result with
-  * (score, term_count) — templates/search.html.tera). Each request runs
-  * [[Search.search]] — the same distributed plan the q13/q34 oracles pin —
-  * against the postings/docmeta tables a crawl wrote; `count` is the
-  * reference's: docs scanned = shard size × shards holding every query
-  * term (count += SHARD_SIZE * shards_scored, src/bin/query.rs:260-263).
+  * (score, term_count) — templates/search.html.tera). Like the reference,
+  * which loads its shard headers once at start, [[start]] opens a
+  * [[Search.Index]] over the postings/docmeta tables a crawl wrote, caches
+  * it before it binds the port and releases it on `stop`; each request runs
+  * [[Search.answer]] on it — the same query function [[Search.search]] (and
+  * so the q34 oracle) runs. `count` is the reference's: docs scanned =
+  * shard size × shards holding every query term (count += SHARD_SIZE *
+  * shards_scored, src/bin/query.rs:260-263).
   */
 object SearchServer {
 
@@ -46,26 +50,28 @@ object SearchServer {
     }
 
   /** One query's raw response data: (scanned count, result rows, ms). */
-  private def runQuery(spark: SparkSession, postings: DataFrame,
-                       docmeta: DataFrame, query: String, topK: Int,
-                       termCountGate: Int): (Long, Array[org.apache.spark.sql.Row], Long) = {
+  private def runQuery(index: Search.Index, query: String, topK: Int,
+                       termCountGate: Int): (Long, Array[Row], Long) = {
     val t0 = System.nanoTime()
-    val (rows, scanned) =
-      if (Search.splitQuery(query).isEmpty)
-        (Array.empty[org.apache.spark.sql.Row], 0L)
+    val (scanned, rows) =
+      if (Search.splitQuery(query).isEmpty) (0L, Array.empty[Row])
       else {
-        val (res, scan) = Search.searchWithScanCount(
-          spark, postings, docmeta, query, topK, termCountGate)
-        (res.collect(), scan.first().getLong(0))
+        val (n, results) = Search.answer(index, query, topK, termCountGate)
+        (n, results.collect())
       }
     (scanned, rows, (System.nanoTime() - t0) / 1000000L)
   }
 
-  /** One query against the index tables, rendered as the response JSON. */
+  /** One query against the index tables, rendered as the response JSON.
+    * While a server started over the same tables runs, this reads its
+    * cached index. */
   def searchJson(spark: SparkSession, postings: DataFrame, docmeta: DataFrame,
-                 query: String, topK: Int, termCountGate: Int): String = {
-    val (scanned, rows, ms) =
-      runQuery(spark, postings, docmeta, query, topK, termCountGate)
+                 query: String, topK: Int, termCountGate: Int): String =
+    renderJson(Search.Index.open(postings, docmeta), query, topK, termCountGate)
+
+  private def renderJson(index: Search.Index, query: String, topK: Int,
+                         termCountGate: Int): String = {
+    val (scanned, rows, ms) = runQuery(index, query, topK, termCountGate)
     // score/term_count are numeric but their width follows the caller's
     // docmeta schema (int in the demo, long in the oracle fixtures)
     val results = rows.map { r =>
@@ -78,9 +84,12 @@ object SearchServer {
     * form, "Scanned through N pages in Tms", and one anchor per result
     * with (score, term_count). Served for `format=html`. */
   def searchHtml(spark: SparkSession, postings: DataFrame, docmeta: DataFrame,
-                 query: String, topK: Int, termCountGate: Int): String = {
-    val (scanned, rows, ms) =
-      runQuery(spark, postings, docmeta, query, topK, termCountGate)
+                 query: String, topK: Int, termCountGate: Int): String =
+    renderHtml(Search.Index.open(postings, docmeta), query, topK, termCountGate)
+
+  private def renderHtml(index: Search.Index, query: String, topK: Int,
+                         termCountGate: Int): String = {
+    val (scanned, rows, ms) = runQuery(index, query, topK, termCountGate)
     val items = rows.map { r =>
       val u = hstr(r.getString(0))
       s"""      <div><a href="$u">$u</a> (${r.get(1)}, ${r.get(2)})</div>"""
@@ -102,11 +111,17 @@ object SearchServer {
   }
 
   /** Start serving `GET /search?query=...` on `port` (0 = ephemeral; read
-    * the bound port from the returned server). The caller owns the Spark
+    * the bound port from the returned server). The index is opened, cached
+    * and computed before the port is bound; `stop` on the returned server
+    * releases the cache. Servers over the same tables share that cache, and
+    * the first `stop` releases it for all of them. The caller owns the Spark
     * session and the server's lifecycle. */
   def start(spark: SparkSession, postings: DataFrame, docmeta: DataFrame,
             port: Int, topK: Int = 20, termCountGate: Int = 8): HttpServer = {
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
+    val index = Search.Index.open(postings, docmeta).persist()
+    val server =
+      try HttpServer.create(new InetSocketAddress(port), 0)
+      catch { case e: Throwable => index.unpersist(); throw e }
     server.createContext("/search", new HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
@@ -124,8 +139,8 @@ object SearchServer {
               .toMap
             val q = params.getOrElse("query", "")
             val body =
-              if (html) searchHtml(spark, postings, docmeta, q, topK, termCountGate)
-              else searchJson(spark, postings, docmeta, q, topK, termCountGate)
+              if (html) renderHtml(index, q, topK, termCountGate)
+              else renderJson(index, q, topK, termCountGate)
             (200, body)
           } catch {
             case e: Exception if html =>
@@ -145,20 +160,38 @@ object SearchServer {
     // like the reference funnels every request through one worker pool
     server.setExecutor(null)
     server.start()
-    server
+    new IndexServer(server, index)
+  }
+
+  /** The running server: `stop` also drops the index's cached data. */
+  private final class IndexServer(http: HttpServer, index: Search.Index) extends HttpServer {
+    override def stop(delay: Int): Unit = try http.stop(delay) finally index.unpersist()
+    override def bind(addr: InetSocketAddress, backlog: Int): Unit = http.bind(addr, backlog)
+    override def start(): Unit = http.start()
+    override def setExecutor(e: Executor): Unit = http.setExecutor(e)
+    override def getExecutor: Executor = http.getExecutor
+    override def createContext(path: String, h: HttpHandler): HttpContext = http.createContext(path, h)
+    override def createContext(path: String): HttpContext = http.createContext(path)
+    override def removeContext(path: String): Unit = http.removeContext(path)
+    override def removeContext(c: HttpContext): Unit = http.removeContext(c)
+    override def getAddress: InetSocketAddress = http.getAddress
   }
 
   /** `runMain graft.SearchServer <crawlStateDir> <port> [topK] [gate]` —
-    * serve the index a [[CrawlLoop]] run wrote under `stateDir`. */
+    * serve the index a [[CrawlLoop]] run wrote under `stateDir`, with
+    * `SPARK_GRAFT_CPUS` task threads and shuffle partitions (else the JVM's
+    * processor count). */
   def main(args: Array[String]): Unit = {
     val stateDir = args(0)
     val port = args(1).toInt
     val topK = args.lift(2).map(_.toInt).getOrElse(20)
     val gate = args.lift(3).map(_.toInt).getOrElse(8)
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
     val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
+      .master(sys.env.getOrElse("SPARK_MASTER", s"local[$cpus]"))
       .appName("graft-search")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
