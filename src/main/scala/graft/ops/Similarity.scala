@@ -1,8 +1,11 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftColumns.column
+import org.apache.spark.sql.classic.ColumnConversions.expression
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{Codebooks, Dot, NearestCodeword}
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (array<float>).
@@ -18,20 +21,21 @@ import org.apache.spark.sql.functions._
   *    Hyperplanes are ±1 Rademacher vectors derived from the portable
   *    md5 hash, so bucket assignment is engine-reproducible (no RNG state).
   *
-  * Dot products are computed with built-in higher-order functions
-  * (zip_with + aggregate) in double precision, left-to-right — codegen'd,
-  * no UDF, and bit-reproducible.
+  * Every dot product and norm is the native `graft_dot` kernel
+  * ([[graft.functions.Dot]]): double precision, summed left to right from
+  * 0.0, one codegen'd loop per row, no UDF — bit-identical to the
+  * `aggregate(zip_with(...))` fold it replaced, whose interpreted lambdas
+  * got no codegen. Nearest-codeword assignment (IVF cells, PQ codes) is the
+  * [[graft.functions.NearestCodeword]] kernel over a codebook held on the
+  * driver: one narrow pass, no join and no shuffle.
   */
 object Similarity {
 
-  /** Sum of elementwise products, double precision, sequential. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
+  /** Sum of elementwise products, double precision, left to right from 0.0
+    * (`graft_dot`). */
+  def dot(a: Column, b: Column): Column = column(Dot(expression(a), expression(b)))
 
-  def norm(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
-      lit(0.0), (acc, x) => acc + x))
+  def norm(a: Column): Column = sqrt(dot(a, a))
 
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
@@ -97,11 +101,7 @@ object Similarity {
     val byPlane = vectors
       .select(col("vec_id"), col("embedding"),
         explode(sequence(lit(0), lit(tables * planes - 1), lit(1))).as("plane"))
-      .withColumn("proj",
-        aggregate(
-          zip_with(col("embedding"), element_at(wLit, col("plane") + 1),
-            (x, w) => x.cast("double") * w),
-          lit(0.0), (acc, x) => acc + x))
+      .withColumn("proj", dot(col("embedding"), element_at(wLit, col("plane") + 1)))
       .withColumn("table", (col("plane") / planes).cast("int"))
       .withColumn("bitval",
         when(col("proj") > 0,
@@ -185,23 +185,46 @@ object Similarity {
       .distinct().count()
   }
 
-  /** IVF cell assignment: each vector joins its nearest centroid (argmax
-    * cosine, ties to the lowest centroid id). The codebook broadcasts; the
-    * corpus side is one narrow pass + a map-side-partial argmax aggregate —
-    * no shuffle of the embeddings. */
+  /** A codebook held on the driver: (id, components), components null when
+    * the embedding is null or holds a null (its dot products are null). */
+  private type Codewords = Seq[(Long, Array[Double])]
+
+  /** The centroid frame's rows, collected — one small action, in place of
+    * the broadcast the codebook join needed. */
+  private def collectCodewords(centroids: DataFrame): Codewords =
+    centroids.select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
+      .collect().toSeq.map { r =>
+        val v = if (r.isNullAt(1)) null else r.getSeq[Any](1)
+        (r.getLong(0),
+          if (v == null || v.contains(null)) null else v.map(_.asInstanceOf[Double]).toArray)
+      }
+
+  private case class Codeword(cid: Long, ce: Option[Seq[Double]])
+
+  /** The codewords as one literal array<struct<cid, ce>>, for plans that
+    * fan a row out over every codeword (probes, ADC tables). */
+  private def codewordsLit(cws: Codewords): Column =
+    typedLit(cws.map { case (id, v) => Codeword(id, Option(v).map(_.toSeq)) })
+
+  /** Id of `vector`'s best codeword in group `group` of `books`, or null
+    * when that group is empty ([[NearestCodeword]]). */
+  private def nearest(vector: Column, group: Column, books: Codebooks): Column =
+    column(NearestCodeword(expression(vector), expression(group), books))
+
+  /** `vectors` plus `cell`, its nearest centroid: argmax cosine, ties to the
+    * lowest id, computed in place by the nearest-codeword kernel. A narrow
+    * projection: no join against the codebook, no shuffle. Rows drop only
+    * when there are no centroids. */
+  private def withCell(vectors: DataFrame, cents: Codewords): DataFrame =
+    vectors.withColumn("cell", nearest(col("embedding"), lit(0), Codebooks(Seq(cents), cosine = true)))
+      .filter(col("cell").isNotNull)
+
+  /** IVF cell assignment: (vec_id, cell), each vector's nearest centroid
+    * (argmax cosine, ties to the lowest centroid id). The centroids are
+    * collected to the driver and every vector takes its argmax in place —
+    * one narrow pass over `vectors`, no join, no shuffle. */
   def ivfAssign(vectors: DataFrame, centroids: DataFrame): DataFrame =
-    vectors
-      // one norm per vector, not one per (vector, centroid) — the argmax
-      // fans each vector out kCells ways and the renorm fold was O(dim)
-      // on every fanned row (same operands/order, bit-identical sims)
-      .withColumn("vn", norm(col("embedding")))
-      .crossJoin(broadcast(
-        centroids.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-          norm(col("embedding")).as("cn"))))
-      .withColumn("sim", dot(col("embedding"), col("ce")) / (col("vn") * col("cn")))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("sim"), (col("cid") * -1).as("ncid"), col("cid"))).as("m"))
-      .select(col("vec_id"), col("m.cid").as("cell"))
+    withCell(vectors, collectCodewords(centroids)).select(col("vec_id"), col("cell"))
 
   /** Lloyd's k-means codebook for IVF, spherical flavor (assignment by
     * cosine, as [[ivfAssign]]). Init = the first `kCells` corpus vectors;
@@ -217,14 +240,11 @@ object Similarity {
     * combine — O(parts * kCells * dim), never the embeddings themselves.
     * Cells that lose all members keep their previous centroid.
     *
-    * LINEAGE: the centroid frame is kCells×dim — tiny — so each iteration
-    * COLLECTS it to the driver and rebuilds a literal DataFrame for the
-    * next assignment pass. Without that, iteration i's plan references
-    * iteration i−1's unmaterialized frame twice (assignment + the
-    * empty-cell coalesce) and the logical plan grows geometrically with
-    * `iters` (fine at 2, pathological at 10+). One extra tiny action per
-    * iteration buys flat lineage; values are bit-identical (the collected
-    * doubles round-trip exactly).
+    * LINEAGE: the centroids are kCells×dim — tiny — so they live on the
+    * driver between iterations, and each iteration's assignment takes them
+    * as a literal codebook ([[withCell]]): every iteration's plan is the
+    * same size, one narrow assignment pass plus the mean aggregate's one
+    * shuffle. The collected doubles round-trip exactly.
     * Output: (vec_id = cell id 0..kCells-1, embedding array<double>). */
   def kmeansCodebook(vectors: DataFrame, kCells: Int, iters: Int): DataFrame = {
     val spark = vectors.sparkSession
@@ -232,21 +252,18 @@ object Similarity {
     val Scale = 1048576L // 2^20: float components scale exactly in a double
     // centroids live driver-side between iterations: id -> components
     var cents: Seq[(Long, Seq[Double])] = vectors.filter(col("vec_id") < kCells)
-      .select(col("vec_id").cast("long"),
-        transform(col("embedding"), x => x.cast("double")))
+      .select(col("vec_id").cast("long"), col("embedding").cast("array<double>"))
       .collect().toSeq
       .map(r => (r.getLong(0), r.getSeq[Double](1)))
       .sortBy(_._1)
-    def centsDf: DataFrame = cents.toDF("vec_id", "embedding")
     for (_ <- 0 until iters) {
-      val asg = ivfAssign(vectors, centsDf)
-      val trained = vectors.join(asg, "vec_id")
+      val trained = withCell(vectors, cents.map { case (id, v) => (id, v.toArray) })
         .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
         .groupBy(col("cell"), col("pos"))
         .agg(sum(round(col("v").cast("double") * Scale).cast("long")).as("s"),
           count(lit(1)).as("n"))
         // the same double math as the pre-flattening form: s / n / Scale
-        .select(col("cell").cast("long"), col("pos"),
+        .select(col("cell"), col("pos"),
           (col("s").cast("double") / col("n") / Scale).as("v"))
         .collect()
         .groupBy(_.getLong(0))
@@ -255,32 +272,34 @@ object Similarity {
       // keep the old centroid for any cell that lost all members
       cents = cents.map { case (id, old) => (id, trained.getOrElse(id, old)) }
     }
-    centsDf
+    cents.toDF("vec_id", "embedding")
   }
+
+  /** IVF probe: each query's `nprobe` nearest cells by cosine, ties to the
+    * lowest cell id. Output (qid, qe, qn, cell) — qn = ‖query‖, computed
+    * once per query. The query fans out over the literal codebook (no
+    * join); the ranking window shuffles only (query × cell) rows. */
+  private def ivfProbes(queries: DataFrame, cents: Codewords, nprobe: Int): DataFrame =
+    queries.select(col("vec_id").as("qid"), col("embedding").as("qe"),
+        norm(col("embedding")).as("qn"), explode(codewordsLit(cents)).as("c"))
+      .withColumn("csim", dot(col("qe"), col("c.ce")) / (col("qn") * norm(col("c.ce"))))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("c.cid").asc)))
+      .filter(col("rk") <= nprobe)
+      .select(col("qid"), col("qe"), col("qn"), col("c.cid").as("cell"))
 
   /** [[ivfTopK]] against an explicit codebook (e.g. [[kmeansCodebook]]).
     * Same assignment / probe / per-cell-join plan — the codebook only
     * changes which vectors share a cell, i.e. recall. */
   def ivfTopKWith(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
                   nprobe: Int, k: Int): DataFrame = {
-    val cells = ivfAssign(corpus, centroids)
+    val cents = collectCodewords(centroids)
     // norms once per side (query / member), not once per probe/candidate
     // row — same operands and order as cosine(), bit-identical sims
-    val probes = queries
-      .withColumn("qn", norm(col("embedding")))
-      .crossJoin(broadcast(
-        centroids.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-          norm(col("embedding")).as("cn"))))
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid").asc)))
-      .filter(col("rk") <= nprobe)
-      .select(col("vec_id").as("qid"), col("embedding").as("qe"),
-        col("qn"), col("cid").as("cell"))
-    val members = cells.join(corpus, "vec_id")
+    val members = withCell(corpus, cents)
       .select(col("cell"), col("vec_id").as("nid"), col("embedding").as("ne"),
         norm(col("embedding")).as("nn"))
-    probes.join(members, Seq("cell"))
+    ivfProbes(queries, cents, nprobe).join(members, Seq("cell"))
       .filter(col("qid") =!= col("nid"))
       .withColumn("sim", dot(col("qe"), col("ne")) / (col("qn") * col("nn")))
       .withColumn("rank", row_number().over(
@@ -334,35 +353,30 @@ object Similarity {
   private def pqSubbed(vectors: DataFrame, m: Int, d0: Int): DataFrame =
     vectors.select(col("vec_id"),
         explode(sequence(lit(0), lit(m - 1), lit(1))).as("sub"),
-        transform(col("embedding"), x => x.cast("double")).as("de"))
+        col("embedding").cast("array<double>").as("de"))
       .select(col("vec_id"), col("sub"),
         slice(col("de"), col("sub") * d0 + 1, lit(d0)).as("se"))
 
-  /** Euclidean assignment of every (vector, subspace) row to its nearest
-    * codeword: argmin ||x−c||² = argmax dot(x,c) − ||c||²/2 for fixed x —
-    * a broadcast of the tiny codebook, one map-side-partial argmax
-    * aggregate, no embedding shuffle (the IVF-assign shape per subspace).
-    * Ties go to the lowest codeword id. Output: (vec_id, sub, code). */
-  private def pqAssign(subbed: DataFrame, books: DataFrame): DataFrame =
-    subbed.join(broadcast(books), "sub")
-      .withColumn("score",
-        dot(col("se"), col("ce")) - dot(col("ce"), col("ce")) / 2)
-      .groupBy(col("vec_id"), col("sub"))
-      .agg(max(struct(col("score"), (col("cid") * -1).as("nc"), col("cid"))).as("mx"))
-      .select(col("vec_id"), col("sub"), col("mx.cid").as("code"))
+  /** The books' codewords grouped by subspace: index s holds subspace s's. */
+  private def bySub(books: Seq[(Int, Long, Seq[Double])]): Seq[Codewords] =
+    Seq.tabulate(books.map(_._1).max + 1)(s =>
+      books.filter(_._1 == s).map(b => (b._2, b._3.toArray)))
 
-  private def pqBooksDf(spark: org.apache.spark.sql.SparkSession,
-                        books: Seq[(Int, Long, Seq[Double])]): DataFrame = {
-    import spark.implicits._
-    books.toDF("sub", "cid", "ce")
-  }
+  /** `subbed` plus `code`: each (vector, subspace) row's nearest codeword
+    * in Euclidean distance — argmin ‖x−c‖² = argmax dot(x,c) − ‖c‖²/2 for
+    * fixed x, ‖c‖²/2 computed once per codeword — ties to the lowest
+    * codeword id. In place per row by the nearest-codeword kernel: no
+    * join, no shuffle. */
+  private def withCode(subbed: DataFrame, books: Seq[(Int, Long, Seq[Double])]): DataFrame =
+    subbed.withColumn("code", nearest(col("se"), col("sub"), Codebooks(bySub(books), cosine = false)))
+      .filter(col("code").isNotNull)
 
   /** Lloyd's-trained PQ codebooks: for each of `m` subspaces, `kCodes`
     * codewords refined over `iters` Euclidean k-means iterations — ALL
-    * subspaces train in the same per-iteration job (one assignment pass +
-    * one integer-scaled mean aggregate over the exploded frame, collected
-    * at m·kCodes·d0 rows — driver-literal codebooks, flat lineage like
-    * [[kmeansCodebook]]). Init: codeword j of subspace s = vector j's
+    * subspaces train in the same per-iteration job (one narrow assignment
+    * pass + one integer-scaled mean aggregate over the exploded frame,
+    * collected at m·kCodes·d0 rows — driver-literal codebooks, flat lineage
+    * like [[kmeansCodebook]]). Init: codeword j of subspace s = vector j's
     * subvector — which PRESUMES vec_ids are dense from 0 (the same
     * convention [[kmeansCodebook]] and [[ivfTopK]] use for their
     * first-k init); a sparse or offset id space is rejected below rather
@@ -371,7 +385,6 @@ object Similarity {
     * Returns (sub, cid, components) rows. */
   def pqTrain(vectors: DataFrame, m: Int, kCodes: Int,
               iters: Int): Seq[(Int, Long, Seq[Double])] = {
-    val spark = vectors.sparkSession
     val peek = vectors.select(size(col("embedding"))).limit(1).collect()
     require(peek.nonEmpty, "pqTrain: empty corpus")
     val dim = peek(0).getInt(0)
@@ -388,8 +401,7 @@ object Similarity {
       s"pqTrain: init found ${books.size / m} of $kCodes codewords — " +
         "vec_ids must be dense from 0 (kmeansCodebook/ivfTopK convention)")
     for (_ <- 0 until iters) {
-      val asg = pqAssign(subbed, pqBooksDf(spark, books))
-      val trained = subbed.join(asg, Seq("vec_id", "sub"))
+      val trained = withCode(subbed, books)
         .select(col("sub"), col("code"), posexplode(col("se")).as(Seq("pos", "v")))
         .groupBy(col("sub"), col("code"), col("pos"))
         .agg(sum(round(col("v") * PqScale).cast("long")).as("s"),
@@ -413,7 +425,44 @@ object Similarity {
                books: Seq[(Int, Long, Seq[Double])]): DataFrame = {
     val m = books.map(_._1).max + 1
     val d0 = books.head._3.size
-    pqAssign(pqSubbed(vectors, m, d0), pqBooksDf(vectors.sparkSession, books))
+    withCode(pqSubbed(vectors, m, d0), books).select(col("vec_id"), col("sub"), col("code"))
+  }
+
+  /** ADC lookup table: for every query, subspace and codeword, the
+    * integer-scaled partial dot `dotm` and codeword norm² `n2m` —
+    * (qid, sub, code, dotm, n2m), m·kCodes rows per query. Each (query,
+    * subspace) row fans out over its subspace's literal codebook (no
+    * join). */
+  private def adcTable(queries: DataFrame, books: Seq[(Int, Long, Seq[Double])]): DataFrame = {
+    val subs = bySub(books)
+    pqSubbed(queries, subs.size, books.head._3.size)
+      .select(col("vec_id").as("qid"), col("sub"), col("se"),
+        explode(element_at(array(subs.map(codewordsLit): _*), col("sub") + 1)).as("c"))
+      .select(col("qid"), col("sub"), col("c.cid").as("code"),
+        round(dot(col("se"), col("c.ce")) * PqScale).cast("long").as("dotm"),
+        round(dot(col("c.ce"), col("c.ce")) * PqScale).cast("long").as("n2m"))
+  }
+
+  /** ADC top-k over (qid, vec_id, dotm, n2m) candidate rows, one per
+    * (query, candidate, subspace): the integer-scaled partials sum per
+    * pair, approx sim = dot(q, x̂) / (‖q‖·‖x̂‖), self excluded, rank ties
+    * by nn_id asc. */
+  private def adcTopK(partials: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+    val qnorms = queries.select(col("vec_id").as("qid"),
+      norm(col("embedding")).as("qn"))
+    partials
+      .groupBy(col("qid"), col("vec_id"))
+      .agg(sum(col("dotm")).as("dots"), sum(col("n2m")).as("n2s"))
+      .filter(col("qid") =!= col("vec_id"))
+      .join(broadcast(qnorms), "qid")
+      .withColumn("sim",
+        (col("dots").cast("double") / PqScale) /
+          (col("qn") * sqrt(col("n2s").cast("double") / PqScale)))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)))
+      .filter(col("rank") <= k)
+      .select(col("qid").as("vec_id"), col("vec_id").as("nn_id"), col("rank"),
+        round(col("sim"), 4).as("sim"))
   }
 
   /** PQ-ADC approximate top-k: train codebooks on `corpus`, encode it,
@@ -426,28 +475,8 @@ object Similarity {
   def pqTopK(queries: DataFrame, corpus: DataFrame, m: Int, kCodes: Int,
              iters: Int, k: Int): DataFrame = {
     val books = pqTrain(corpus, m, kCodes, iters)
-    val d0 = books.head._3.size
-    val codes = pqEncode(corpus, books)
-    val lut = pqSubbed(queries, m, d0)
-      .join(broadcast(pqBooksDf(queries.sparkSession, books)), "sub")
-      .select(col("vec_id").as("qid"), col("sub"), col("cid").as("code"),
-        round(dot(col("se"), col("ce")) * PqScale).cast("long").as("dotm"),
-        round(dot(col("ce"), col("ce")) * PqScale).cast("long").as("n2m"))
-    val qnorms = queries.select(col("vec_id").as("qid"),
-      norm(col("embedding")).as("qn"))
-    codes.join(broadcast(lut), Seq("sub", "code"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("dotm")).as("dots"), sum(col("n2m")).as("n2s"))
-      .filter(col("qid") =!= col("vec_id"))
-      .join(broadcast(qnorms), "qid")
-      .withColumn("sim",
-        (col("dots").cast("double") / PqScale) /
-          (col("qn") * sqrt(col("n2s").cast("double") / PqScale)))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("vec_id"), col("vec_id").as("nn_id"), col("rank"),
-        round(col("sim"), 4).as("sim"))
+    adcTopK(pqEncode(corpus, books).join(broadcast(adcTable(queries, books)), Seq("sub", "code")),
+      queries, k)
   }
 
   /** IVF-PQ composed ANN, IVFADC-style (after Jégou et al. 2011 §V):
@@ -456,7 +485,7 @@ object Similarity {
     * IVFPQ), the codes quantize the RAW vectors with one codebook shared
     * by every cell, not the residuals (vector minus its assigned
     * centroid); the q54 oracle twin encodes the same way. Both halves
-    * already exist ([[ivfTopK]]'s probe plan, [[pqTopK]]'s LUT plan); the composition
+    * already exist ([[ivfProbes]], [[adcTable]]); the composition
     * inserts the probe join before the ADC join, so the scoring pass
     * touches nprobe/kCells of the code table and the raw embeddings
     * never enter the hot path at all. Same determinism discipline:
@@ -466,43 +495,14 @@ object Similarity {
   def ivfpqTopK(queries: DataFrame, corpus: DataFrame, kCells: Int,
                 nprobe: Int, m: Int, kCodes: Int, iters: Int,
                 k: Int): DataFrame = {
-    val centroids = corpus.filter(col("vec_id") < kCells)
-    val cells = ivfAssign(corpus, centroids)
+    val cents = collectCodewords(corpus.filter(col("vec_id") < kCells))
+    val cells = withCell(corpus, cents).select(col("vec_id"), col("cell"))
     val books = pqTrain(corpus, m, kCodes, iters)
-    val d0 = books.head._3.size
-    val codes = pqEncode(corpus, books)
-    val probes = queries
-      .withColumn("qn", norm(col("embedding")))
-      .crossJoin(broadcast(
-        centroids.select(col("vec_id").as("cid"), col("embedding").as("ce"),
-          norm(col("embedding")).as("cn"))))
-      .withColumn("csim", dot(col("embedding"), col("ce")) / (col("qn") * col("cn")))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid").asc)))
-      .filter(col("rk") <= nprobe)
-      .select(col("vec_id").as("qid"), col("cid").as("cell"))
-    val lut = pqSubbed(queries, m, d0)
-      .join(broadcast(pqBooksDf(queries.sparkSession, books)), "sub")
-      .select(col("vec_id").as("qid"), col("sub"), col("cid").as("code"),
-        round(dot(col("se"), col("ce")) * PqScale).cast("long").as("dotm"),
-        round(dot(col("ce"), col("ce")) * PqScale).cast("long").as("n2m"))
-    val qnorms = queries.select(col("vec_id").as("qid"),
-      norm(col("embedding")).as("qn"))
-    codes.join(cells, "vec_id")
-      .join(broadcast(probes), Seq("cell"))
-      .join(broadcast(lut), Seq("qid", "sub", "code"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("dotm")).as("dots"), sum(col("n2m")).as("n2s"))
-      .filter(col("qid") =!= col("vec_id"))
-      .join(broadcast(qnorms), "qid")
-      .withColumn("sim",
-        (col("dots").cast("double") / PqScale) /
-          (col("qn") * sqrt(col("n2s").cast("double") / PqScale)))
-      .withColumn("rank", row_number().over(
-        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col("vec_id").asc)))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("vec_id"), col("vec_id").as("nn_id"), col("rank"),
-        round(col("sim"), 4).as("sim"))
+    val probes = ivfProbes(queries, cents, nprobe).select(col("qid"), col("cell"))
+    adcTopK(pqEncode(corpus, books).join(cells, "vec_id")
+        .join(broadcast(probes), Seq("cell"))
+        .join(broadcast(adcTable(queries, books)), Seq("qid", "sub", "code")),
+      queries, k)
   }
 
   /** Embedding-cosine near-duplicate pairs: (id_a, id_b, sim) with

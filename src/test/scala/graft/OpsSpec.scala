@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Curation, Dedup, MultiModal, Similarity, TextOps}
@@ -395,6 +396,147 @@ class OpsSpec extends AnyFunSuite {
         m = 2, kCodes = 4, iters = 2, k = 1)
       .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
     partBest.foreach { case (q, s) => assert(s <= fullBest(q) + 1e-9) }
+  }
+
+  /** The assignment passes in their join + grouped-argmax form: the
+    * higher-order dot fold, a broadcast join against the codebook and a
+    * `max(struct(score, -id, id))` per vector. The nearest-codeword kernel
+    * must give the same rows. */
+  private object JoinArgmax {
+    def dot(a: Column, b: Column): Column =
+      aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+        lit(0.0), (acc, x) => acc + x)
+    def norm(a: Column): Column = sqrt(dot(a, a))
+
+    def ivfAssign(vectors: DataFrame, centroids: DataFrame): DataFrame =
+      vectors.withColumn("vn", norm(col("embedding")))
+        .crossJoin(broadcast(centroids.select(col("vec_id").as("cid"),
+          col("embedding").as("ce"), norm(col("embedding")).as("cn"))))
+        .withColumn("sim", dot(col("embedding"), col("ce")) / (col("vn") * col("cn")))
+        .groupBy(col("vec_id"))
+        .agg(max(struct(col("sim"), (col("cid") * -1).as("ncid"), col("cid"))).as("m"))
+        .select(col("vec_id"), col("m.cid").as("cell"))
+
+    def kmeans(vectors: DataFrame, kCells: Int, iters: Int): Set[(Long, Seq[Double])] = {
+      var cents = vectors.filter(col("vec_id") < kCells)
+        .select(col("vec_id"), col("embedding").cast("array<double>")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+      for (_ <- 0 until iters) {
+        val trained = vectors.join(ivfAssign(vectors, cents.toDF("vec_id", "embedding")), "vec_id")
+          .select(col("cell"), posexplode(col("embedding")).as(Seq("pos", "v")))
+          .groupBy(col("cell"), col("pos"))
+          .agg(sum(round(col("v").cast("double") * 1048576L).cast("long")).as("s"),
+            count(lit(1)).as("n"))
+          .select(col("cell"), col("pos"), (col("s").cast("double") / col("n") / 1048576L).as("v"))
+          .collect().groupBy(_.getLong(0))
+          .map { case (c, rs) => c -> rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toSeq }
+        cents = cents.map { case (id, old) => (id, trained.getOrElse(id, old)) }
+      }
+      cents.toSet
+    }
+
+    def pqEncode(vectors: DataFrame, books: Seq[(Int, Long, Seq[Double])]): DataFrame = {
+      val m = books.map(_._1).max + 1
+      val d0 = books.head._3.size
+      vectors.select(col("vec_id"), explode(sequence(lit(0), lit(m - 1))).as("sub"),
+          col("embedding").cast("array<double>").as("de"))
+        .select(col("vec_id"), col("sub"), slice(col("de"), col("sub") * d0 + 1, lit(d0)).as("se"))
+        .join(broadcast(books.toDF("sub", "cid", "ce")), "sub")
+        .withColumn("score", dot(col("se"), col("ce")) - dot(col("ce"), col("ce")) / 2)
+        .groupBy(col("vec_id"), col("sub"))
+        .agg(max(struct(col("score"), (col("cid") * -1).as("nc"), col("cid"))).as("mx"))
+        .select(col("vec_id"), col("sub"), col("mx.cid").as("code"))
+    }
+  }
+
+  /** Small-integer vectors (components in {-1, 0, 1}, none all-zero), so
+    * cosine and Euclidean scores tie often; vectors 3 and 5 repeat 1 and 0,
+    * so first-k codebooks hold duplicate codewords. */
+  private def tieVectors: DataFrame = {
+    val rng = new scala.util.Random(11L)
+    val base = (0 until 48).map { _ =>
+      val v = Array.fill(4)((rng.nextInt(3) - 1).toFloat)
+      if (v.forall(_ == 0f)) v(0) = 1f
+      v
+    }
+    base.indices.map { i =>
+      (i.toLong, if (i == 3) base(1) else if (i == 5) base(0) else base(i))
+    }.toDF("vec_id", "embedding")
+  }
+  private def zeroVector = Seq((99L, Array(0f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+
+  private def rows(df: DataFrame): Set[Seq[Any]] = df.collect().map(_.toSeq).toSet
+
+  /** A vectors frame as it is (a local relation: the optimizer evaluates
+    * the kernel interpreted, on the driver) and repartitioned (the
+    * generated code runs in tasks). */
+  private val bothPaths: Seq[DataFrame => DataFrame] = Seq(identity, _.repartition(3))
+
+  private def withAnsi[T](on: Boolean)(body: => T): T = {
+    val key = "spark.sql.ansi.enabled"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, on.toString)
+    try body finally spark.conf.set(key, old)
+  }
+
+  private def divideByZero(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists {
+      case t: org.apache.spark.SparkThrowable => t.getCondition == "DIVIDE_BY_ZERO"
+      case _ => false
+    }
+
+  test("ivfAssign: a zero-norm vector or centroid divides by zero as Spark's `/` does") {
+    val cents = tieVectors.filter(col("vec_id") < 6)
+    for (path <- bothPaths) {
+      val vecs = path(tieVectors.union(zeroVector))
+      val ties = path(tieVectors)
+      // ANSI mode: the cosine divisor 0 raises DIVIDE_BY_ZERO, for a zero
+      // vector and for a zero centroid alike
+      withAnsi(on = true) {
+        assert(divideByZero(intercept[Exception](Similarity.ivfAssign(vecs, cents).collect())))
+        assert(divideByZero(intercept[Exception](
+          Similarity.ivfAssign(ties, cents.union(zeroVector)).collect())))
+      }
+      // otherwise `/` gives null: the zero vector's every sim is null, so it
+      // takes the lowest centroid id, and a zero centroid never wins
+      withAnsi(on = false) {
+        val got = Similarity.ivfAssign(vecs, cents).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got(99L) == 0L)
+        val zeroCent = Similarity.ivfAssign(ties, cents.union(zeroVector)).collect()
+        assert(zeroCent.length == 48 && zeroCent.forall(_.getLong(1) != 99L))
+      }
+    }
+  }
+
+  test("nearest-codeword assignment == join + max(struct) argmax on ties and zero norms") {
+    // duplicate centroids (ids 3 = 1, 5 = 0, and 7 = 2 given out of order)
+    val cents = tieVectors.filter(col("vec_id") < 6)
+      .union(tieVectors.filter(col("vec_id") === 2).select(lit(7L).as("vec_id"), col("embedding")))
+      .orderBy(col("vec_id").desc)
+    for (path <- bothPaths) {
+      val ties = path(tieVectors)
+      val got = rows(Similarity.ivfAssign(ties, cents))
+      assert(got == rows(JoinArgmax.ivfAssign(ties, cents)))
+      assert(got.map(_(1)).subsetOf(Set(0L, 1L, 2L, 4L))) // duplicates lose every tie
+      assert(Similarity.kmeansCodebook(ties, kCells = 6, iters = 3).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1))).toSet ==
+        JoinArgmax.kmeans(ties, kCells = 6, iters = 3))
+      // PQ: 2-dim subvectors over {-1, 0, 1} repeat everywhere, and the zero
+      // vector needs no division (Euclidean scores)
+      val withZero = path(tieVectors.union(zeroVector))
+      for (iters <- Seq(0, 2)) {
+        val books = Similarity.pqTrain(ties, m = 2, kCodes = 6, iters = iters)
+        assert(rows(Similarity.pqEncode(withZero, books)) == rows(JoinArgmax.pqEncode(withZero, books)))
+      }
+      // outside ANSI mode the zero vector is assigned, not raised
+      withAnsi(on = false) {
+        assert(rows(Similarity.ivfAssign(withZero, cents)) == rows(JoinArgmax.ivfAssign(withZero, cents)))
+        assert(Similarity.kmeansCodebook(withZero, kCells = 6, iters = 2).collect()
+          .map(r => (r.getLong(0), r.getSeq[Double](1))).toSet ==
+          JoinArgmax.kmeans(withZero, kCells = 6, iters = 2))
+      }
+    }
   }
 
   test("rolling fingerprint: in-range, content-sensitive, dup-invariant") {

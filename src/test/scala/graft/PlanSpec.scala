@@ -130,6 +130,43 @@ class PlanSpec extends AnyFunSuite {
       s"document text must not cross the shuffle:\n$plan")
   }
 
+  test("nearest-codeword assignment: one narrow pass, no Exchange and no join") {
+    import graft.ops.Similarity
+    import org.apache.spark.sql.execution.{SparkPlan, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val rng = new scala.util.Random(9L)
+    val vecs = (0L until 60L).map(i => (i, Array.fill(8)(rng.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    for (df <- Seq(Similarity.ivfAssign(vecs, vecs.filter(col("vec_id") < 4)),
+                   Similarity.pqEncode(vecs, Similarity.pqTrain(vecs, m = 2, kCodes = 4, iters = 1)))) {
+      val plan = executedPlanOf(df)
+      assert(!plan.contains("Exchange"), s"assignment must not shuffle:\n$plan")
+      assert(!plan.contains("Join"), s"assignment must not join the codebook:\n$plan")
+    }
+    // the training loops: every pass they run has no join, and at most the
+    // one Exchange of the integer-scaled mean aggregate
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plans = scala.collection.mutable.Buffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.synchronized { plans += qe.executedPlan }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Similarity.kmeansCodebook(vecs, kCells = 4, iters = 2).collect()
+      Similarity.pqTrain(vecs, m = 2, kCodes = 4, iters = 2)
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size >= 4, s"${plans.size} training queries seen")
+    plans.foreach { p =>
+      assert(helper.collect(p) { case j: BaseJoinExec => j }.isEmpty, s"training joins:\n$p")
+      assert(helper.collect(p) { case e: ShuffleExchangeLike => e }.size <= 1, s"training shuffles:\n$p")
+    }
+  }
+
   private object Dedup2 {
     def minhashPlan(docs: org.apache.spark.sql.DataFrame) =
       graft.ops.Dedup.minhashSignatures(
