@@ -332,11 +332,14 @@ object CrawlLoop {
 
         // optional live indexing (reference indexes while crawling,
         // src/main.rs:256-280): each superstep is one index epoch, written
-        // idempotently (dynamic partition overwrite) to the shared tables
+        // idempotently (dynamic partition overwrite) to the shared tables;
+        // the terms are extracted once, cached for both sinks
         if (cfg.indexWhileCrawling) {
-          val (postings, docmeta) = Indexer.index(ok, cfg, epoch = batch)
+          val terms = Indexer.docTerms(ok, cfg).persist()
+          val (postings, docmeta) = Indexer.fromTerms(terms, epoch = batch)
           Indexer.writePostings(postings, Snapshots.postingsPath(stateDir))
           Indexer.writeDocmeta(docmeta, Snapshots.docmetaPath(stateDir))
+          terms.unpersist()
         }
 
         val links = Parser.linksOf(ok, cfg)

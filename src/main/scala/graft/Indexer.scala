@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions._
   * dictionary/RLE encoding replaces the hand-rolled RunEncoder
   * (src/runencoder.rs). The sorted binary-searchable header file
   * (src/index.rs:88-98) is replaced by the in-memory per-(epoch, term)
-  * stats table of [[Search.Index]], computed once when the index is opened.
+  * stats table of [[Search.Index]], computed once and held on the driver
+  * when the index is persisted.
   * Parquet's term min/max row-group stats do not take its place: at crawl
   * sizes each file is one row group whose term range spans the vocabulary,
   * so a term-predicate scan reads every row.
@@ -40,23 +41,33 @@ object Indexer {
       terms.groupBy(identity).map { case (t, xs) => t -> quantize(xs.size.toLong, n) }))
   }
 
-  /** fetched ok-HTML docs (url, spans) → (postings, docmeta) for one epoch.
-    *
-    * One shuffle total: the doc's term array and its length are computed
-    * narrow (Catalyst regex pipeline, no UDF), then a single
-    * groupBy(doc, term) hash aggregate (map-side partial agg) produces TFs;
-    * n_terms rides along as max() so no second shuffle/window is needed.
-    */
-  def index(okHtml: DataFrame, cfg: CrawlConfig, epoch: Int): (DataFrame, DataFrame) = {
-    val withTerms = okHtml
+  /** fetched ok-HTML docs (url, spans) → (postings, docmeta) for one epoch:
+    * [[fromTerms]] over [[docTerms]]. */
+  def index(okHtml: DataFrame, cfg: CrawlConfig, epoch: Int): (DataFrame, DataFrame) =
+    fromTerms(docTerms(okHtml, cfg), epoch)
+
+  /** fetched ok-HTML docs (url, spans) → one row per doc that passes the
+    * min-token gate: (url, terms, n_terms, doc_id). The term array and its
+    * length are computed narrow, by the Catalyst regex pipeline with no
+    * UDF. Both sinks read this frame, so a caller that writes both persists
+    * it, or each write extracts the terms again. */
+  def docTerms(okHtml: DataFrame, cfg: CrawlConfig): DataFrame =
+    okHtml
       .withColumn("html", Parser.cappedHtmlCol(col("spans"), cfg.maxDocumentLen))
       .select(col("url"), Parser.termsCol(col("html")).as("terms"))
       .withColumn("n_terms", size(col("terms")).cast("long"))
       .filter(col("n_terms") >= cfg.minTokens) // F8 min-token gate
       .withColumn("doc_id", xxhash64(col("url")))
 
+  /** [[docTerms]] rows → (postings, docmeta) for one epoch.
+    *
+    * One shuffle total: a single groupBy(doc, term) hash aggregate (map-side
+    * partial agg) produces TFs; n_terms rides along as max() so no second
+    * shuffle/window is needed.
+    */
+  def fromTerms(withTerms: DataFrame, epoch: Int): (DataFrame, DataFrame) = {
     val tf = withTerms
-      .select(col("doc_id"), col("url"), col("n_terms"), explode(col("terms")).as("term"))
+      .select(col("doc_id"), col("n_terms"), explode(col("terms")).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("cnt"), max(col("n_terms")).as("n_terms"))
 

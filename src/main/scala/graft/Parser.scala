@@ -173,8 +173,11 @@ object Parser {
         cfg.crossDomainBonus, cfg.academicOnly)(col("url"), col("spans"))).as("l"))
       .select(col("l.url").as("url"), col("l.host").as("host"), col("l.weight").as("weight"))
 
-  /** Term extraction as pure Catalyst nested regexp extraction (codegen'd,
-    * no UDF on the token hot path): sections → tag texts → terms. */
+  /** Term extraction as pure Catalyst nested regexp extraction, no UDF on
+    * the token hot path: sections → tag texts → terms. The `transform`
+    * lambdas are higher-order functions, which Spark evaluates interpreted
+    * per row, not in generated code, as `linkSpanUdf`'s doc says of
+    * [[htmlCol]]. */
   def termsCol(html: Column): Column = {
     val sections = regexp_extract_all(html, lit(BodyRe), lit(0))
     val tagTexts = flatten(transform(sections, s => regexp_extract_all(s, lit(TagTextRe), lit(1))))

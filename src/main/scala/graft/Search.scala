@@ -14,12 +14,15 @@ import org.apache.spark.sql.functions._
   * terms' postings per request.
   *
   * Spark: an [[Search.Index]] is opened once over (postings, docmeta) and
-  * holds the per-(shard, term) stats table in the header's role. A query is
-  * then two actions: a preamble that collects the query terms' stats rows
-  * and decides on the driver which shards take part, with their shift
-  * vectors and the scanned count, and a top-k over the postings of those
-  * terms and shards: groupBy(epoch, doc) AND-check → the same fold as a
-  * deterministic array fold → docmeta join → TakeOrderedAndProject.
+  * holds the per-(shard, term) stats table in the header's role; a
+  * persisted index also holds a copy of that table on the driver, as the
+  * reference holds its headers. A query decides on the driver which shards
+  * take part, with their shift vectors and the scanned count, from the
+  * query terms' stats rows, and then runs a top-k over the postings of
+  * those terms and shards: groupBy(epoch, doc) AND-check → the same fold as
+  * a deterministic array fold → docmeta join → TakeOrderedAndProject. Over
+  * a persisted index the top-k is the query's one Spark job, and a query
+  * that no shard fully holds runs none.
   */
 object Search {
 
@@ -71,6 +74,10 @@ object Search {
   def splitQuery(q: String): Seq[String] =
     q.split("\\s+").filter(_.nonEmpty).map(_.toLowerCase).toSeq
 
+  /** One row of the header: shard `epoch`'s docs with a non-zero score for
+    * `term` (`df`), its max score (`mx`), and the shard's doc count. */
+  final case class TermStats(epoch: Int, term: String, df: Long, mx: Long, shardSize: Long)
+
   /** An opened index, the role of the reference's loaded shards
     * (src/indexshard.rs:22-74). `postings` (epoch, term, doc_id, score) and
     * `docmeta` (epoch, doc_id, url, term_count) are both hash-partitioned by
@@ -81,19 +88,36 @@ object Search {
     *
     * [[Index.open]] runs no job and builds the same plans for the same
     * tables, so an index opened over tables whose index was [[persist]]ed
-    * reads the cached data: Spark's cache manager matches plans, not objects. */
+    * reads the cached data: Spark's cache manager matches plans, not objects.
+    * [[persist]] also collects `stats` to the driver ([[header]]), one row
+    * per (epoch, term), which [[unpersist]] drops; only the index object
+    * that was persisted holds it. */
   final case class Index(postings: DataFrame, docmeta: DataFrame, stats: DataFrame) {
+    @volatile private var held: Option[Map[String, Array[TermStats]]] = None
+
+    /** The driver-held header by term, while this index is persisted. */
+    def header: Option[Map[String, Array[TermStats]]] = held
+
     /** Cache all three and compute them now; `stats` last, so it reads the
-      * other two from the cache. */
+      * other two from the cache, and its one pass also fills [[header]]. */
     def persist(): Index = {
-      Seq(postings, docmeta, stats).foreach { d => d.persist(); d.count() }
+      Seq(postings, docmeta, stats).foreach(_.persist())
+      Seq(postings, docmeta).foreach(_.count())
+      held = Some(statsRows(stats).groupBy(_.term))
       this
     }
 
-    /** Drop the cached data; `stats` first, since its cache was built from
-      * the other two. */
-    def unpersist(): Unit = Seq(stats, docmeta, postings).foreach(_.unpersist())
+    /** Drop the header and the cached data; `stats` first, since its cache
+      * was built from the other two. */
+    def unpersist(): Unit = {
+      held = None
+      Seq(stats, docmeta, postings).foreach(_.unpersist())
+    }
   }
+
+  private def statsRows(stats: DataFrame): Array[TermStats] =
+    stats.select("epoch", "term", "df", "mx", "shard_size").collect()
+      .map(r => TermStats(r.getInt(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
 
   object Index {
     def open(postings: DataFrame, docmeta: DataFrame): Index = {
@@ -130,31 +154,33 @@ object Search {
     * every doc of a participating shard goes through the scoring fold,
     * zeros included).
     *
-    * The preamble is this call's one action: it collects the query terms'
-    * stats rows. The stats table holds one row per (epoch, term), so that is
-    * at most |epochs| × |distinct query terms| rows whatever the corpus size
-    * — the data the reference reads from its shard headers, and a few
-    * thousand rows even at thousands of epochs. On the driver it keeps the
-    * shards that hold every term (AND semantics, src/bin/query.rs:163-170),
-    * computes their shift vectors (the add_scores preamble,
-    * src/bin/query.rs:119-136) and sums their sizes. The top-k frame is the
-    * second action, when the caller collects it; if no shard takes part it
-    * is empty and runs no job. */
+    * The query terms' stats rows come from the index's [[Index.header]]
+    * when it is persisted, and otherwise from one action that collects them
+    * from `stats`. The stats table holds one row per (epoch, term), so that
+    * is at most |epochs| × |distinct query terms| rows whatever the corpus
+    * size — the data the reference reads from its shard headers. On the
+    * driver the call keeps the shards that hold every term (AND semantics,
+    * src/bin/query.rs:163-170), computes their shift vectors (the
+    * add_scores preamble, src/bin/query.rs:119-136) and sums their sizes.
+    * The top-k frame runs its one job when the caller collects it; if no
+    * shard takes part it is empty and runs no job. */
   def answer(index: Index, query: String, topK: Int = 20,
              termCountGate: Int = 8): (Long, DataFrame) = {
     val terms = splitQuery(query)
     require(terms.nonEmpty, "empty query")
     val termsD = terms.distinct
 
-    val statsRows = index.stats.filter(col("term").isin(termsD: _*))
-      .select("epoch", "term", "df", "mx", "shard_size").collect()
+    val termStats = index.header match {
+      case Some(h) => termsD.flatMap(h.getOrElse(_, Array.empty[TermStats]))
+      case None => statsRows(index.stats.filter(col("term").isin(termsD: _*))).toSeq
+    }
     // the shards holding every query term, with their shift vectors
-    val shards = statsRows.groupBy(_.getInt(0)).filter(_._2.length == termsD.size)
-    val scanned = shards.values.map(_.head.getLong(4)).sum
+    val shards = termStats.groupBy(_.epoch).filter(_._2.length == termsD.size)
+    val scanned = shards.values.map(_.head.shardSize).sum
     val shifts = shards.map { case (e, rows) =>
-      val byTerm = rows.map(r => r.getString(1) -> r).toMap
-      e -> ScoreMath.shifts(terms.map(byTerm(_).getLong(2)),
-        terms.map(byTerm(_).getLong(3)), rows.head.getLong(4))
+      val byTerm = rows.map(r => r.term -> r).toMap
+      e -> ScoreMath.shifts(terms.map(byTerm(_).df), terms.map(byTerm(_).mx),
+        rows.head.shardSize)
     }
 
     val foldUdf = udf((e: Int, m: Map[String, Int]) =>

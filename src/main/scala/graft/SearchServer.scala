@@ -19,11 +19,15 @@ import java.util.concurrent.Executor
   * (score, term_count) — templates/search.html.tera). Like the reference,
   * which loads its shard headers once at start, [[start]] opens a
   * [[Search.Index]] over the postings/docmeta tables a crawl wrote, caches
-  * it before it binds the port and releases it on `stop`; each request runs
-  * [[Search.answer]] on it — the same query function [[Search.search]] (and
-  * so the q34 oracle) runs. `count` is the reference's: docs scanned =
-  * shard size × shards holding every query term (count += SHARD_SIZE *
-  * shards_scored, src/bin/query.rs:260-263).
+  * it and collects its header to the driver before it binds the port, and
+  * releases both on `stop`; each request runs [[Search.answer]] on it — the
+  * same query function [[Search.search]] (and so the q34 oracle) runs. A
+  * request is then the top-k's one Spark job, and no job for a query that
+  * no shard fully holds. The response goes out with TCP_NODELAY, so its
+  * body does not wait behind Nagle's algorithm for the client's delayed ACK
+  * of the headers (the JDK server writes them as two segments). `count` is
+  * the reference's: docs scanned = shard size × shards holding every query
+  * term (count += SHARD_SIZE * shards_scored, src/bin/query.rs:260-263).
   */
 object SearchServer {
 
@@ -112,12 +116,21 @@ object SearchServer {
 
   /** Start serving `GET /search?query=...` on `port` (0 = ephemeral; read
     * the bound port from the returned server). The index is opened, cached
-    * and computed before the port is bound; `stop` on the returned server
-    * releases the cache. Servers over the same tables share that cache, and
-    * the first `stop` releases it for all of them. The caller owns the Spark
-    * session and the server's lifecycle. */
+    * and computed, and its header collected to the driver, before the port
+    * is bound; `stop` on the returned server releases the cache and drops
+    * the header. Servers over the same tables share that cache, and the
+    * first `stop` releases it for all of them. The caller owns the Spark
+    * session and the server's lifecycle.
+    *
+    * Unless the caller has already set it, this sets the JDK property
+    * `sun.net.httpserver.nodelay=true` before creating the server. The JDK
+    * reads the property once per JVM, when the first `HttpServer` is
+    * created, so it only takes effect if no `HttpServer` was created
+    * before; and it then also applies to every later `HttpServer` in the
+    * same JVM. */
   def start(spark: SparkSession, postings: DataFrame, docmeta: DataFrame,
             port: Int, topK: Int = 20, termCountGate: Int = 8): HttpServer = {
+    sys.props.getOrElseUpdate("sun.net.httpserver.nodelay", "true") // TCP_NODELAY
     val index = Search.Index.open(postings, docmeta).persist()
     val server =
       try HttpServer.create(new InetSocketAddress(port), 0)
@@ -163,8 +176,10 @@ object SearchServer {
     new IndexServer(server, index)
   }
 
-  /** The running server: `stop` also drops the index's cached data. */
-  private final class IndexServer(http: HttpServer, index: Search.Index) extends HttpServer {
+  /** The running server: `stop` also drops the index's cached data and its
+    * driver-held header. */
+  private[graft] final class IndexServer(http: HttpServer, val index: Search.Index)
+      extends HttpServer {
     override def stop(delay: Int): Unit = try http.stop(delay) finally index.unpersist()
     override def bind(addr: InetSocketAddress, backlog: Int): Unit = http.bind(addr, backlog)
     override def start(): Unit = http.start()

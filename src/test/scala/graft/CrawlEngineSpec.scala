@@ -453,4 +453,42 @@ class CrawlEngineSpec extends AnyFunSuite {
     }
     assert(deniedHosts.nonEmpty, "fixture should pop some blocked-host URLs")
   }
+
+  test("indexing while crawling: each superstep's postings and docmeta equal Indexer.indexDoc") {
+    val ixCfg = cfg.copy(maxBatches = 3, indexWhileCrawling = true)
+    val dir = tmpDir("index")
+    val res = runEngine(dir, ixCfg)
+    val o = ReferenceOracle.run(docsLocal, Corpus.robotsEntries, Corpus.seeds(nDocs), ixCfg)
+    assert(res.batches.size == 3 && o.popBatches.size == 3)
+
+    // plain Scala: the docs of each pop batch that robots allow, that
+    // exist, and that are 2xx text/html, indexed one by one
+    val rules = Corpus.robotsEntries.map(r => r.host -> r.disallow).toMap
+    val docByUrl = docsLocal.map(d => d.doc_id -> d).toMap
+    val okHtml = o.popBatches.zipWithIndex.flatMap { case (urls, epoch) =>
+      urls.toSeq.filter(Robots.allowed(_, rules)).flatMap(docByUrl.get)
+        .filter(d => d.status >= 200 && d.status < 300 && d.content_type.startsWith("text/html"))
+        .map(epoch -> _)
+    }
+    val indexed = okHtml.flatMap { case (epoch, d) =>
+      Indexer.indexDoc(Parser.cappedHtmlOf(d.spans, ixCfg.maxDocumentLen), ixCfg.minTokens)
+        .map(epoch -> d.doc_id -> _)
+    }
+    val wantPostings = indexed.flatMap { case ((e, url), (_, tf)) =>
+      tf.map { case (t, score) => (e, url, t, score) }
+    }.sorted
+    val wantDocmeta = indexed.map { case ((e, url), (tc, _)) => (e, url, tc) }.sorted
+    assert(wantDocmeta.map(_._1).distinct.size >= 2, "need docs indexed in two supersteps")
+    assert(wantDocmeta.size < okHtml.size, "the min-token gate should drop some docs")
+
+    val postings = spark.read.parquet(Snapshots.postingsPath(dir))
+    val docmeta = spark.read.parquet(Snapshots.docmetaPath(dir))
+    val gotPostings = postings.join(docmeta.select("doc_id", "url"), "doc_id")
+      .select(col("epoch"), col("url"), col("term"), col("score")).collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getInt(3))).toSeq.sorted
+    val gotDocmeta = docmeta.select("epoch", "url", "term_count").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getInt(2))).toSeq.sorted
+    assert(gotDocmeta == wantDocmeta)
+    assert(gotPostings == wantPostings)
+  }
 }
