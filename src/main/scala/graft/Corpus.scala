@@ -77,7 +77,6 @@ object Corpus {
     // outlinks: random graph edges + admission-filter exercise cases
     val nLinks = 3 + rng.nextInt(6)
     val targets = Seq.fill(nLinks)(rng.nextInt(nDocs).toLong).distinct
-    val sb = new StringBuilder
     def linkHtml(u: String): String = s"<a href='$u'>go</a>"
     val isTrapPage = rng.nextDouble() < 0.04
     val extra = new StringBuilder

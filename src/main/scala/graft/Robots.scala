@@ -16,7 +16,6 @@ import org.apache.spark.sql.functions._
 object Robots {
 
   private val DisallowRe = """^Disallow: ([^\s]+)""".r
-  private val UserAgentRe = """^User-agent: (.*)$""".r
 
   /** Parse a robots.txt body exactly as the reference does
     * (src/robots.rs:59-84): collect Disallow prefixes in `User-agent: *` or
@@ -65,16 +64,6 @@ object Robots {
       .withColumn("path", pathCol(col("url")))
       .filter(col("disallow").isNull ||
         !exists(col("disallow"), p => col("path").startsWith(p)))
-      .drop("disallow", "path")
-  }
-
-  /** The complement (for the robots-denied metric). */
-  def deniedBatch(popBatch: DataFrame, robots: DataFrame): DataFrame = {
-    popBatch
-      .join(broadcast(robots.select(col("host"), col("disallow"))), Seq("host"), "left")
-      .withColumn("path", pathCol(col("url")))
-      .filter(col("disallow").isNotNull &&
-        exists(col("disallow"), p => col("path").startsWith(p)))
       .drop("disallow", "path")
   }
 }

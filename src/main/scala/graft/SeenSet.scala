@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.ByteBuffer
+import scala.collection.mutable.ArrayBuffer
 
 /** Partial-key (fingerprint) cuckoo filter.
   *
@@ -175,27 +176,32 @@ object CuckooFilter {
   * sketch so the two coexist as the north star asks). */
 object SeenSet {
 
+  /** Bloom false-positive rate of every filter the seen set builds. */
+  private val Fpp = 0.03
+
   /** The url key hash shared by every filter (one hash per url, both
     * filters key on it). */
   def urlHash(url: String): Long = CuckooFilter.hash64(url)
 
-  /** Both aggregators buffer url HASHES and size the filter at finish()
-    * from the EXACT group count: a fixed expected-capacity filter either
-    * wastes memory or saturates — and a saturated cuckoo filter silently
-    * DROPS fingerprints on insert failure (false negatives), which would
-    * break the membership contract. Buffering costs 8 bytes per url per
-    * group, bounded by the batch's fresh-url count. */
-  final class CuckooAggregator
-      extends Aggregator[String, scala.collection.mutable.ArrayBuffer[Long], Array[Byte]] {
-    def zero: scala.collection.mutable.ArrayBuffer[Long] =
-      scala.collection.mutable.ArrayBuffer.empty
+  /** Both filter aggregators buffer url HASHES and size the filter at
+    * finish() from the EXACT group count: a fixed expected-capacity filter
+    * either wastes memory or saturates — and a saturated cuckoo filter
+    * silently DROPS fingerprints on insert failure (false negatives), which
+    * would break the membership contract. Buffering costs 8 bytes per url
+    * per group, bounded by the batch's fresh-url count. */
+  sealed abstract class UrlHashAggregator
+      extends Aggregator[String, ArrayBuffer[Long], Array[Byte]] {
+    def zero: ArrayBuffer[Long] = ArrayBuffer.empty
     // null-tolerant so callers can fuse filter construction into a wider
     // aggregation via when(cond, url) — null means "not a member url"
-    def reduce(b: scala.collection.mutable.ArrayBuffer[Long], url: String) =
-      { if (url != null) b += urlHash(url); b }
-    def merge(a: scala.collection.mutable.ArrayBuffer[Long],
-              b: scala.collection.mutable.ArrayBuffer[Long]) = { a ++= b; a }
-    def finish(b: scala.collection.mutable.ArrayBuffer[Long]): Array[Byte] = {
+    def reduce(b: ArrayBuffer[Long], url: String) = { if (url != null) b += urlHash(url); b }
+    def merge(a: ArrayBuffer[Long], b: ArrayBuffer[Long]) = { a ++= b; a }
+    def bufferEncoder: Encoder[ArrayBuffer[Long]] = Encoders.kryo[ArrayBuffer[Long]]
+    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
+  }
+
+  final class CuckooAggregator extends UrlHashAggregator {
+    def finish(b: ArrayBuffer[Long]): Array[Byte] = {
       // Dedup first: an identical hash can occupy at most 8 slots across its
       // two candidate buckets, so duplicate-heavy input (urls repeated >8x,
       // or 64-bit hash collisions) could defeat ANY capacity — and
@@ -214,28 +220,23 @@ object SeenSet {
       }
       built.serialize()
     }
-    def bufferEncoder: Encoder[scala.collection.mutable.ArrayBuffer[Long]] =
-      Encoders.kryo[scala.collection.mutable.ArrayBuffer[Long]]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
 
-  final class BloomAggregator(fpp: Double)
-      extends Aggregator[String, scala.collection.mutable.ArrayBuffer[Long], Array[Byte]] {
-    def zero: scala.collection.mutable.ArrayBuffer[Long] =
-      scala.collection.mutable.ArrayBuffer.empty
-    def reduce(b: scala.collection.mutable.ArrayBuffer[Long], url: String) =
-      { if (url != null) b += urlHash(url); b } // null-tolerant (see cuckoo)
-    def merge(a: scala.collection.mutable.ArrayBuffer[Long],
-              b: scala.collection.mutable.ArrayBuffer[Long]) = { a ++= b; a }
-    def finish(b: scala.collection.mutable.ArrayBuffer[Long]): Array[Byte] = {
-      val f = BloomFilter.create(math.max(b.size.toLong, 16L), fpp)
+  final class BloomAggregator extends UrlHashAggregator {
+    def finish(b: ArrayBuffer[Long]): Array[Byte] = {
+      val f = BloomFilter.create(math.max(b.size.toLong, 16L), Fpp)
       b.foreach(f.putLong)
       val out = new ByteArrayOutputStream(); f.writeTo(out); out.toByteArray
     }
-    def bufferEncoder: Encoder[scala.collection.mutable.ArrayBuffer[Long]] =
-      Encoders.kryo[scala.collection.mutable.ArrayBuffer[Long]]
-    def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
   }
+
+  /** The aggregate pair every filter row is built from: a Bloom filter over
+    * `bloomUrl` and a cuckoo filter over `cuckooUrl`, aliased `bloom` and
+    * `cuckoo`. Both aggregators skip nulls, so a `when(cond, url)` input
+    * narrows one filter's membership inside a wider groupBy(bucket). */
+  def filterAggs(bloomUrl: Column, cuckooUrl: Column): Seq[Column] =
+    Seq(udaf(new BloomAggregator).apply(bloomUrl).as("bloom"),
+      udaf(new CuckooAggregator).apply(cuckooUrl).as("cuckoo"))
 
   /** Build one Bloom + one cuckoo filter per frontier bucket:
     * filters(bucket, bloom, cuckoo), each sized from the bucket's exact url
@@ -243,29 +244,27 @@ object SeenSet {
     * monolithic 20 GB filter (src/main-old.rs:57) can't be broadcast, but
     * per-bucket filters co-partitioned with the URL hash can be probed with
     * zero shuffle of the link stream. */
-  def buildFilters(urlsWithBucket: DataFrame, fpp: Double = 0.03): DataFrame = {
-    val bloomAgg = udaf(new BloomAggregator(fpp))
-    val cuckooAgg = udaf(new CuckooAggregator)
-    urlsWithBucket
-      .groupBy(col("bucket"))
-      .agg(bloomAgg(col("url")).as("bloom"), cuckooAgg(col("url")).as("cuckoo"))
+  def buildFilters(urlsWithBucket: DataFrame): DataFrame = {
+    val aggs = filterAggs(col("url"), col("url"))
+    urlsWithBucket.groupBy(col("bucket")).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** [[buildFilters]] variant whose CUCKOO excludes `excludedUrls` while
-    * Bloom still takes every url — the rebuild shape when pending-retired
-    * urls exist: Bloom stays "ever inserted", cuckoo stays "currently
-    * live". `excludedUrls` (a one-column `url` frame) is broadcast — it is
-    * maintenance-sized by construction. */
-  def buildFiltersExcluding(urlsWithBucket: DataFrame, excludedUrls: DataFrame,
-                            fpp: Double = 0.03): DataFrame = {
-    val bloomAgg = udaf(new BloomAggregator(fpp))
-    val cuckooAgg = udaf(new CuckooAggregator)
-    urlsWithBucket
-      .join(broadcast(excludedUrls.select(col("url")).distinct()
-        .withColumn("__excluded", lit(1))), Seq("url"), "left")
-      .groupBy(col("bucket"))
-      .agg(bloomAgg(col("url")).as("bloom"),
-        cuckooAgg(when(col("__excluded").isNull, col("url"))).as("cuckoo"))
+  /** Filter rows REBUILT from an authoritative (url, bucket) set — the shape
+    * the crawl loop's compaction and [[graft.CrawlLoop.retire]] share.
+    * Bloom takes every url ("ever inserted"); cuckoo ("currently live")
+    * takes only the urls where `live` holds and that are absent from
+    * `pending`, a one-column `url` frame of pending-retired urls. `pending`
+    * is broadcast — it is maintenance-sized by construction. */
+  def rebuildFilters(urls: DataFrame, live: Column,
+                     pending: Option[DataFrame]): DataFrame = {
+    val (in, cuckooLive) = pending match {
+      case None => (urls, live)
+      case Some(p) =>
+        (urls.join(broadcast(p.select(col("url")).withColumn("__pending", lit(1))),
+          Seq("url"), "left"), live && col("__pending").isNull)
+    }
+    val aggs = filterAggs(col("url"), when(cuckooLive, col("url")))
+    in.groupBy(col("bucket")).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Retire urls from a (bucket, bloom, cuckoo) filter table: deletes each
@@ -306,36 +305,7 @@ object SeenSet {
             .otherwise(del(col("cuckoo"), col("__retire"))).as("cuckoo")): _*)
   }
 
-  /** Merge two filter tables: the union IS the merged form — a bucket may
-    * carry several delta rows and membership is "hit in ANY of them"
-    * ([[probeWith]]). Filters are exact-count sized per delta, so blob-level
-    * merging (which requires identical geometry and can silently saturate a
-    * cuckoo filter, dropping fingerprints) is deliberately NOT offered; to
-    * get back to one row per bucket, REBUILD from the authoritative url set
-    * (the crawl loop compacts from the frontier this way). */
-  def mergeFilterTables(a: DataFrame, b: DataFrame): DataFrame =
-    a.unionByName(b)
-
-  /** Per-partition membership probe — the scale-correct shape.
-    *
-    * The old form (a UDF over a filter-bytes column joined per row) would
-    * deserialize a multi-MB sketch for EVERY candidate link; this one
-    * broadcasts the whole filter table once (the reference holds exactly
-    * this sketch in RAM on its single node — 20 GB Bloom,
-    * src/main-old.rs:57-58) and deserializes each bucket's filter at most
-    * once per (partition, bucket), via a lazy per-partition cache. The probe
-    * is a narrow map: NO shuffle of the link stream. If the caller has
-    * already partitioned links by bucket, each task deserializes exactly its
-    * own buckets; if the total sketch ever outgrows executor memory, raise
-    * nBuckets and swap the broadcast for a bucket-co-partitioned zip join —
-    * the column contract (input + boolean `out`) is unchanged.
-    */
-  /** bucket -> filter-delta byte blobs (a bucket may carry SEVERAL deltas:
-    * append-only maintenance, compacted periodically; membership = hit in
-    * ANY of them). */
-  type FilterMap = Map[Int, Seq[Array[Byte]]]
-
-  /** The crawl loop's long-lived seen-filter handle: one BROADCAST PER
+  /** The seen-filter handle every probe goes through: one BROADCAST PER
     * DELTA, newest last, plus a cache epoch.
     *
     * The scale contract (judge r2 "what's wrong" #1): each superstep ships
@@ -364,6 +334,27 @@ object SeenSet {
                   delta: Map[Int, Array[Byte]]): FilterBook =
     book.copy(deltas = book.deltas :+ spark.sparkContext.broadcast(delta))
 
+  /** Append filter-table rows (bucket, blob) as deltas of ONE blob per
+    * bucket each: a bucket with k rows spreads over the first k appended
+    * deltas, so no blob ever replaces another (membership is ANY-delta).
+    * A loop superstep writes one row per bucket, so one delta; one that
+    * re-pops retired urls adds a re-insert row for some buckets, and a
+    * union of delta dirs has one row per dir. */
+  def appendRows(spark: org.apache.spark.sql.SparkSession, book: FilterBook,
+                 rows: Seq[(Int, Array[Byte])]): FilterBook = {
+    val byBucket = rows.groupBy(_._1).toSeq
+    val depth = (1 +: byBucket.map(_._2.size)).max
+    (0 until depth).map(k =>
+      byBucket.flatMap { case (b, xs) => xs.lift(k).map(x => b -> x._2) }.toMap)
+      .foldLeft(book)(appendDelta(spark, _, _))
+  }
+
+  /** [[appendRows]] over a filter table's (bucket, `filterCol`) rows. */
+  def appendTable(spark: org.apache.spark.sql.SparkSession, book: FilterBook,
+                  filters: DataFrame, filterCol: String): FilterBook =
+    appendRows(spark, book, filters.select(col("bucket").cast("int"), col(filterCol))
+      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1)).toSeq)
+
   /** Replace the whole book with one compacted delta: bumps the cache epoch
     * (executors drop stale deserialized filters on their next probe) and
     * destroys every superseded broadcast — the old generation's bytes are
@@ -378,61 +369,49 @@ object SeenSet {
   /** Release every broadcast the book holds (end of a crawl). */
   def destroyBook(book: FilterBook): Unit = book.deltas.foreach(_.destroy())
 
-  /** Collect a (bucket, <col>) filter table into a driver-side [[FilterMap]]
-    * — done once per table, then reused across supersteps without
-    * re-reading parquet. */
-  def collectFilterMap(filters: DataFrame, filterColName: String): FilterMap =
-    filters
-      .select(col("bucket").cast("int"), col(filterColName))
-      .collect().map(r => r.getInt(0) -> r.getAs[Array[Byte]](1))
-      .groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2).toSeq }
-
   /** Per-JVM cache of deserialized filters, keyed by (broadcast id, bucket)
     * and guarded by a monotone EPOCH: entries from every delta broadcast of
     * the current book generation coexist (old buckets persist across
     * supersteps — an append does NOT invalidate them), and the whole cache
     * drops only when a newer epoch shows up (compaction / a different
-    * probe). Deserialization happens once per executor per (delta, bucket)
-    * — not per row (the round-1 bug) and not even per partition. */
+    * book). Deserialization happens once per executor per (delta, bucket)
+    * — not per row and not even per partition. */
   private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[(Long, Int), AnyRef]()
+    new java.util.concurrent.ConcurrentHashMap[(Long, Int), Option[Long => Boolean]]()
   @volatile private var probeCacheEpoch = -1L
-  private def cachedFilters[F](epoch: Long, bcId: Long, bucket: Int,
-      load: () => Seq[F]): Seq[F] = {
+  private def cachedFilter(epoch: Long, bcId: Long, bucket: Int,
+      load: () => Option[Long => Boolean]): Option[Long => Boolean] = {
     if (probeCacheEpoch < epoch) synchronized {
       if (probeCacheEpoch < epoch) { probeCache.clear(); probeCacheEpoch = epoch }
     }
-    probeCache.computeIfAbsent((bcId, bucket), _ => load().asInstanceOf[AnyRef])
-      .asInstanceOf[Seq[F]]
+    probeCache.computeIfAbsent((bcId, bucket), _ => load())
   }
 
-  /** The probe is a plain scalar UDF over (bucket, url) with the filter map
-    * captured as a broadcast: the link stream stays inside whole-stage
-    * codegen (no Row-conversion boundary, unlike a mapPartitions), there is
-    * NO join and NO shuffle, and the sketch bytes deserialize once per
-    * executor via [[cachedFilters]]. One-shot form — each call broadcasts
-    * the whole map under a fresh epoch; the crawl loop's long-lived
-    * delta-sized path is [[probeBloomBook]]. */
-  private def probeWith[F](links: DataFrame, fmap: FilterMap,
-      deser: Array[Byte] => F,
-      containsFn: (F, String) => Boolean, out: String): DataFrame = {
-    val bc = links.sparkSession.sparkContext.broadcast(fmap)
-    val bcId = bc.id
-    val epoch = bookEpochs.incrementAndGet()
-    val probeUdf = udf { (bucket: Int, url: String) =>
-      val fs = cachedFilters[F](epoch, bcId, bucket,
-        () => bc.value.getOrElse(bucket, Seq.empty).map(deser))
-      fs.exists(containsFn(_, url))
+  /** Membership test over a url hash for one blob of a `filterCol` column. */
+  private def memberOf(filterCol: String): Array[Byte] => Long => Boolean =
+    filterCol match {
+      case "bloom" => b => BloomFilter.readFrom(new ByteArrayInputStream(b)).mightContainLong
+      case "cuckoo" => b => CuckooFilter.deserialize(b).containsHash
     }
-    links.withColumn(out, probeUdf(col("bucket"), col("url")))
-  }
 
-  /** Book-based Bloom probe: checks the row's bucket in EVERY delta
-    * broadcast (membership = hit in any, no false negatives), deserializing
-    * each (delta, bucket) blob at most once per executor. Narrow — no join,
-    * no shuffle of the link stream. */
-  def probeBloomBook(links: DataFrame, book: FilterBook,
-                     out: String = "seenish"): DataFrame = {
+  /** The one seen-set probe: adds boolean column `out`, true when the row's
+    * url hits its bucket's `filterCol` filter in ANY delta of the book
+    * (false for a bucket no delta holds). Bloom has no false negatives.
+    *
+    * A plain scalar UDF over (bucket, url) with the book's broadcasts
+    * captured: the link stream stays inside whole-stage codegen (no
+    * Row-conversion boundary, unlike a mapPartitions), there is NO join and
+    * NO shuffle of the link stream, and each (delta, bucket) blob
+    * deserializes at most once per executor via [[cachedFilter]] — the
+    * reference holds exactly this sketch in RAM on its single node (20 GB
+    * Bloom, src/main-old.rs:57-58). If the caller has already partitioned
+    * links by bucket, each task deserializes only its own buckets; if the
+    * total sketch ever outgrows executor memory, raise nBuckets and swap
+    * the broadcasts for a bucket-co-partitioned zip join — the column
+    * contract (input + boolean `out`) is unchanged. */
+  private[graft] def probeBook(links: DataFrame, book: FilterBook,
+                               filterCol: String, out: String): DataFrame = {
+    val member = memberOf(filterCol)
     val epoch = book.epoch
     val deltas = book.deltas.toArray
     val probeUdf = udf { (bucket: Int, url: String) =>
@@ -441,10 +420,8 @@ object SeenSet {
       var hit = false
       while (!hit && i < deltas.length) {
         val bc = deltas(i)
-        val fs = cachedFilters[BloomFilter](epoch, bc.id, bucket,
-          () => bc.value.get(bucket)
-            .map(b => BloomFilter.readFrom(new ByteArrayInputStream(b))).toSeq)
-        hit = fs.nonEmpty && fs.head.mightContainLong(h)
+        val f = cachedFilter(epoch, bc.id, bucket, () => bc.value.get(bucket).map(member))
+        hit = f.isDefined && f.get(h)
         i += 1
       }
       hit
@@ -452,47 +429,40 @@ object SeenSet {
     links.withColumn(out, probeUdf(col("bucket"), col("url")))
   }
 
-  /** [[splitByBloomMap]] over a [[FilterBook]] — the crawl loop's steady
-    * state: per-superstep broadcast bytes are O(this batch's delta). */
-  def splitByBloomBook(links: DataFrame, book: FilterBook): (DataFrame, DataFrame) = {
-    val probed = probeBloomBook(links, book)
-    (probed.filter(col("seenish")).drop("seenish"),
-      probed.filter(!col("seenish")).drop("seenish"))
-  }
+  /** The crawl loop's Bloom probe: per-superstep broadcast bytes are
+    * O(this batch's delta). */
+  def probeBloomBook(links: DataFrame, book: FilterBook,
+                     out: String = "seenish"): DataFrame =
+    probeBook(links, book, "bloom", out)
 
-  /** Adds boolean column `out`: Bloom might-contain(url) for the row's
-    * bucket (false for buckets with no filter). No false negatives.
-    * One-shot (broadcasts the whole map); see [[probeBloomBook]]. */
-  def probeBloomMap(links: DataFrame, fmap: FilterMap,
-                    out: String = "seenish"): DataFrame =
-    probeWith[BloomFilter](links, fmap,
-      bytes => BloomFilter.readFrom(new ByteArrayInputStream(bytes)),
-      (f, url) => f.mightContainLong(urlHash(url)), out)
-
+  /** One-shot probes of a (bucket, bloom, cuckoo) filter table: the table's
+    * rows become a fresh book (one broadcast per delta depth), probed like
+    * the loop's. */
   def probeBloom(links: DataFrame, filters: DataFrame,
                  out: String = "seenish"): DataFrame =
-    probeBloomMap(links, collectFilterMap(filters, "bloom"), out)
+    probeTable(links, filters, "bloom", out)
 
   /** Adds boolean column `out`: cuckoo contains(url) for the row's bucket. */
-  def probeCuckooMap(links: DataFrame, fmap: FilterMap,
-                     out: String = "seenish"): DataFrame =
-    probeWith[CuckooFilter](links, fmap,
-      CuckooFilter.deserialize, (f, url) => f.containsHash(urlHash(url)), out)
-
   def probeCuckoo(links: DataFrame, filters: DataFrame,
                   out: String = "seenish"): DataFrame =
-    probeCuckooMap(links, collectFilterMap(filters, "cuckoo"), out)
+    probeTable(links, filters, "cuckoo", out)
+
+  private def probeTable(links: DataFrame, filters: DataFrame,
+                         filterCol: String, out: String): DataFrame =
+    probeBook(links, appendTable(links.sparkSession, emptyBook(), filters, filterCol),
+      filterCol, out)
 
   /** Split candidate links into (probably-seen, definitely-new) using the
     * per-bucket Bloom filters. Bloom guarantees no false negatives, so
     * "definitely-new" is exact — those rows skip the frontier join
     * entirely (J1's shuffle-avoidance at scale, SURVEY §2.5). */
-  def splitByBloomMap(links: DataFrame, fmap: FilterMap): (DataFrame, DataFrame) = {
-    val probed = probeBloomMap(links, fmap)
-    (probed.filter(col("seenish")).drop("seenish"),
-      probed.filter(!col("seenish")).drop("seenish"))
-  }
+  def splitByBloomBook(links: DataFrame, book: FilterBook): (DataFrame, DataFrame) =
+    split(probeBloomBook(links, book))
 
   def splitByBloom(links: DataFrame, filters: DataFrame): (DataFrame, DataFrame) =
-    splitByBloomMap(links, collectFilterMap(filters, "bloom"))
+    split(probeBloom(links, filters))
+
+  private def split(probed: DataFrame): (DataFrame, DataFrame) =
+    (probed.filter(col("seenish")).drop("seenish"),
+      probed.filter(!col("seenish")).drop("seenish"))
 }

@@ -52,7 +52,6 @@ object Snapshots {
   def frontierPath(root: String, batch: Int): String = s"${batchDir(root, batch)}/frontier"
   def popBatchPath(root: String, batch: Int): String = s"${batchDir(root, batch)}/popbatch"
   def filtersPath(root: String, batch: Int): String = s"${batchDir(root, batch)}/filters"
-  def metricsPath(root: String): String = s"$root/metrics"
   def postingsPath(root: String): String = s"$root/index/postings"
   def docmetaPath(root: String): String = s"$root/index/docmeta"
 
@@ -103,8 +102,8 @@ object Snapshots {
                    bucketPaths: Map[String, String]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
     // an empty bucket map is a legal state (e.g. resume of a run whose
-    // frontier drained, or an old-format manifest with no buckets): the
-    // frontier is simply empty and the crawl terminates with zero pops
+    // frontier drained): the frontier is simply empty and the crawl
+    // terminates with zero pops
     if (bucketPaths.isEmpty) return Frontier.empty(spark)
     bucketPaths.groupBy(_._2).map { case (dir, owned) =>
       val bs = owned.keys.map(_.toInt).toSeq

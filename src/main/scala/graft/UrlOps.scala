@@ -163,15 +163,9 @@ object UrlOps {
   // extracted link.
   private val hostUdf = udf((u: String) => host(u).orNull)
   private val canonUdf = udf((u: String) => canonicalize(u).orNull)
-  private val resolveUdf = udf((b: String, h: String) => resolve(b, h).orNull)
   private val trapUdf = udf((u: String) => looksLikeATrap(u).getOrElse(false))
-  private val validUdf = udf((u: String) => isValidUri(u))
-  private val pathUdf = udf((u: String) => path(u))
 
   def hostCol(url: Column): Column = hostUdf(url)
   def canonicalizeCol(url: Column): Column = canonUdf(url)
-  def resolveCol(base: Column, href: Column): Column = resolveUdf(base, href)
   def trapCol(url: Column): Column = trapUdf(url)
-  def validUriCol(url: Column): Column = validUdf(url)
-  def pathCol(url: Column): Column = pathUdf(url)
 }

@@ -356,7 +356,4 @@ object Dedup {
       .groupBy(col("id"))
       .agg(sum(col("bitval")).as("simhash"))
   }
-
-  /** Hamming distance between two simhash sketches (bit_count of xor). */
-  def hammingDist(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 }

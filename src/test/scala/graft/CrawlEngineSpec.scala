@@ -313,10 +313,9 @@ class CrawlEngineSpec extends AnyFunSuite {
     val popped0 = Snapshots.readFrontier(spark, m0.bucketPaths)
       .filter(col("popped")).select("url").collect().map(_.getString(0)).toSet
     assert(popped0.nonEmpty)
-    // bulk retirement: every fetched url plus enough never-crawlable
-    // synthetic urls to cross RetireInListMax several times over (urls
-    // absent from the frontier are ignored by the frontier rewrite but
-    // stay in the pending record until re-crawled)
+    // bulk retirement: every fetched url plus 50K never-crawlable
+    // synthetic urls (urls absent from the frontier are ignored by the
+    // frontier rewrite but stay in the pending record until re-crawled)
     val nBulk = 50000
     val bulk = popped0.toSeq ++ (0 until nBulk).map(i => s"https://bulk.example/r$i")
     CrawlLoop.retire(spark, dir, bulk.toDF("url"), cfg)
@@ -324,16 +323,21 @@ class CrawlEngineSpec extends AnyFunSuite {
     assert(m1.retiredPath.nonEmpty)
     assert(spark.read.parquet(m1.retiredPath.get).count() ==
       nBulk + popped0.size)
-    // the probe a resumed run uses above the threshold: a LEFT-SEMI JOIN
-    // against the retired parquet — the plan must carry no per-url
-    // literals (the old isInCollection form would embed 50K strings)
-    val probe = CrawlLoop.repoppedProbe(spark,
-      Seq(popped0.head).toDF("url"), None, m1.retiredPath)
-    val plan = probe.queryExecution.executedPlan.toString
-    assert(plan.contains("LeftSemi"), plan.take(1000))
-    assert(!plan.contains("isInCollection") && plan.length < 20000,
-      s"probe plan carries literals (${plan.length} chars)")
-    assert(probe.collect().map(_.getString(0)).toSeq == Seq(popped0.head))
+    // the probe a resumed run uses, whatever the record's size: a LEFT-SEMI
+    // JOIN against the retired parquet — the plan must carry no per-url
+    // literals (an isInCollection form would embed 50K strings). A one-url
+    // record takes the same plan.
+    val oneUrl = s"${tmpDir("retired-one")}/retired"
+    Seq(popped0.head).toDF("url").write.parquet(oneUrl)
+    Seq(m1.retiredPath.get, oneUrl).foreach { record =>
+      val probe = CrawlLoop.repoppedProbe(spark,
+        Seq(popped0.head).toDF("url"), record)
+      val plan = probe.queryExecution.executedPlan.toString
+      assert(plan.contains("LeftSemi"), plan.take(1000))
+      assert(!plan.contains("isInCollection") && !plan.contains(popped0.head) &&
+        plan.length < 20000, s"probe plan carries literals (${plan.length} chars)")
+      assert(probe.collect().map(_.getString(0)).toSeq == Seq(popped0.head))
+    }
     // resume with an unconstrained budget: every real retired url is
     // re-popped (re-fetched), restoring cuckoo liveness and shrinking the
     // record by exactly those urls; the synthetic urls stay pending

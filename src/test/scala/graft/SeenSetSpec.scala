@@ -114,11 +114,37 @@ class SeenSetSpec extends AnyFunSuite {
   test("incremental filter-table merge keeps old membership") {
     val a = SeenSet.buildFilters(urlsDf(1000, "a"))
     val b = SeenSet.buildFilters(urlsDf(1000, "b"))
-    val merged = SeenSet.mergeFilterTables(a, b).persist()
+    val merged = a.unionByName(b).persist()
     val all = urlsDf(1000, "a").union(urlsDf(1000, "b"))
     val misses = SeenSet.probeBloom(all, merged).filter(!col("seenish"))
       .union(SeenSet.probeCuckoo(all, merged).filter(!col("seenish")))
       .count()
     assert(misses == 0)
+  }
+
+  test("one-shot table probes equal a book built from the same rows, two rows per bucket") {
+    // two filter rows per bucket: the one-shot probeBloom / probeCuckoo must
+    // answer exactly as the book path over those rows, member or not
+    val a = SeenSet.buildFilters(urlsDf(1000, "a")).collect()
+    val b = SeenSet.buildFilters(urlsDf(1000, "b")).collect()
+    val table = spark.createDataFrame(spark.sparkContext.parallelize((a ++ b).toSeq),
+      a.head.schema)
+    assert(table.groupBy("bucket").count().filter(col("count") =!= 2).count() == 0)
+    val in = urlsDf(1000, "a").union(urlsDf(1000, "b")).union(urlsDf(1000, "x"))
+    Seq("bloom" -> SeenSet.probeBloom(in, table),
+        "cuckoo" -> SeenSet.probeCuckoo(in, table)).foreach { case (kind, oneShot) =>
+      val book = Seq(a, b).foldLeft(SeenSet.emptyBook()) { (bk, rows) =>
+        SeenSet.appendDelta(spark, bk, rows.map(r =>
+          r.getAs[Int]("bucket") -> r.getAs[Array[Byte]](kind)).toMap)
+      }
+      def seen(df: org.apache.spark.sql.DataFrame) =
+        df.select("url", "seenish").collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
+      val got = seen(oneShot)
+      assert(got == seen(SeenSet.probeBook(in, book, kind, "seenish")), kind)
+      // members hit; non-members are mostly misses, not a constant answer
+      assert(got.filter(_._1.contains("/x/")).count(_._2) < 100, kind)
+      assert(got.filter(!_._1.contains("/x/")).forall(_._2), kind)
+      SeenSet.destroyBook(book)
+    }
   }
 }
